@@ -1,9 +1,13 @@
 package graft.ates
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.immutable.SortedMap
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.functions.GeoFunctions._
 import graft.operators.Warnify
+import graft.plans.BoundLong
 
 /** The reference's three entry points (SURVEY §3 EP1-EP3), rebuilt as Spark
   * plans over the 7 ATES relations:
@@ -19,11 +23,12 @@ import graft.operators.Warnify
   * (`Promise.all`, FGU:285) then post-processes rows one at a time in JS;
   * here each table is one declarative branch (scan → filter → project →
   * feature/placemark string column), the decision-points branch inserts the
-  * warnify aggregation, and the union of branches is a single logical plan —
-  * Catalyst schedules the branches in parallel and pushes `area_id = k`
-  * into every scan. The only driver-side step is final document assembly
-  * (single-doc sinks are inherently driver-sized: one KML/GeoJSON document
-  * per request, O(10³) rows in the reference's own envelope).
+  * warnify aggregation, and a document is the union of its branches: one
+  * logical plan run by one action, filtered by `area_id = k` with `k` a
+  * bound parameter, so every area reuses one set of compiled classes. The
+  * per-area result is O(10²) rows, so it is ordered by (section, id) and
+  * grouped into the document's sections on the driver rather than by a
+  * distributed sort per request.
   */
 object AtesPipeline {
 
@@ -38,6 +43,33 @@ object AtesPipeline {
   private def xmlEscape(c: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(c, "&", "&amp;"), "<", "&lt;"),
       ">", "&gt;")
+
+  /** One table's rows for one area, or every row for `None`. `areas_vw` is
+    * keyed by its own id, every other table by `area_id`. The area is a
+    * [[BoundLong]], not a literal, so every area's document compiles to the
+    * same generated code. */
+  private def scoped(tables: Map[String, DataFrame], table: String,
+      areaId: Option[Long]): DataFrame = {
+    val key = if (table == "areas_vw") "id" else "area_id"
+    areaId.fold(tables(table))(a =>
+      tables(table).filter(col(key) === ColumnBridge.column(BoundLong(a))))
+  }
+
+  /** decision_points ⋈ decision_points_warnings (FGU:327-347), aliased
+    * `dp`/`dpw`: the input of both warnify flavours. */
+  private def decisionPointWarnings(tables: Map[String, DataFrame],
+      areaId: Option[Long]): DataFrame =
+    scoped(tables, "decision_points", areaId).alias("dp")
+      .join(tables("decision_points_warnings").alias("dpw"),
+        col("dpw.decision_point_id") === col("dp.id"), "inner")
+
+  /** Runs a (section, id, text) frame as one action and returns each
+    * section's texts in id order (nulls first, Spark's ascending order). */
+  private def sections(df: DataFrame): SortedMap[Int, Seq[String]] =
+    df.collect().toSeq
+      .sortBy(r => (r.getInt(0), Option.when(!r.isNullAt(1))(r.getLong(1))))
+      .groupMap(_.getInt(0))(_.getString(2))
+      .to(SortedMap)
 
   // -------------------------------------------------------------------------
   // GeoJSON side (EP2/EP3)
@@ -69,41 +101,36 @@ object AtesPipeline {
   def geoJsonFeatures(tables: Map[String, DataFrame],
       areaId: Option[Long]): DataFrame = {
 
-    def scoped(df: DataFrame, key: String = "area_id") =
-      areaId.map(a => df.filter(col(key) === a)).getOrElse(df)
+    def scoped(table: String) = AtesPipeline.scoped(tables, table, areaId)
 
-    val areas = scoped(tables("areas_vw"), "id")
+    val areas = scoped("areas_vw")
       .select(lit(0).as("qidx"), lit("areas_vw").as("table"), col("id"),
         featureJson("areas_vw",
           Seq(col("id"), col("name")), withBbox = true).as("feature"))
 
-    val poi = scoped(tables("points_of_interest"))
+    val poi = scoped("points_of_interest")
       .select(lit(1).as("qidx"), lit("points_of_interest").as("table"), col("id"),
         featureJson("points_of_interest",
           Seq(col("id"), col("area_id"), col("name"),
             normType(col("type")).as("type"), col("comments")),
           withBbox = false).as("feature"))
 
-    val roads = scoped(tables("access_roads"))
+    val roads = scoped("access_roads")
       .select(lit(2).as("qidx"), lit("access_roads").as("table"), col("id"),
         featureJson("access_roads",
           Seq(col("id"), col("area_id"), col("description")),
           withBbox = false).as("feature"))
 
-    val paths = scoped(tables("avalanche_paths"))
+    val paths = scoped("avalanche_paths")
       .select(lit(3).as("qidx"), lit("avalanche_paths").as("table"), col("id"),
         featureJson("avalanche_paths",
           Seq(col("id"), col("area_id"), col("name")),
           withBbox = false).as("feature"))
 
-    // decision_points ⋈ warnings (FGU:327-347) → warnify (FGU:287-289).
-    // The warnings side is a per-point detail table: broadcast the smaller
-    // side; at 100 TB this is the one branch that shuffles (by geometry).
-    val dp = scoped(tables("decision_points")).alias("dp")
-    val dpw = tables("decision_points_warnings").alias("dpw")
-    val joined = dp.join(dpw,
-      col("dpw.decision_point_id") === col("dp.id"), "inner")
-    val warnified = Warnify.geoJson(joined,
+    // decision_points ⋈ warnings → warnify (FGU:287-289). The warnings
+    // side is a per-point detail table: broadcast the smaller side; at
+    // 100 TB this is the one branch that shuffles (by geometry).
+    val warnified = Warnify.geoJson(decisionPointWarnings(tables, areaId),
         geom = col("dp.geom"),
         typeCol = normType(col("dpw.type")),
         warning = col("dpw.warning"),
@@ -116,7 +143,7 @@ object AtesPipeline {
             col("warnings")),
           withBbox = false).as("feature"))
 
-    val zones = scoped(tables("zones"))
+    val zones = scoped("zones")
       .select(lit(5).as("qidx"), lit("zones").as("table"), col("id"),
         featureJson("zones",
           Seq(col("id"), col("area_id"), col("class_code"), col("comments")),
@@ -127,14 +154,11 @@ object AtesPipeline {
   }
 
   /** EP2: the single FeatureCollection document (FGU:212-215, :291-294,
-    * :362-368). Driver-side assembly in deterministic (qidx, id) order —
-    * the engine form of the reference's query-array-then-row order. */
+    * :362-368), features in (qidx, id) order — the engine form of the
+    * reference's query-array-then-row order. */
   def featureCollection(tables: Map[String, DataFrame], areaId: Long): String = {
-    val feats = geoJsonFeatures(tables, Some(areaId))
-      .orderBy(col("qidx"), col("id"))
-      .select(col("feature"))
-      .collect()
-      .map(_.getString(0))
+    val feats = sections(geoJsonFeatures(tables, Some(areaId))
+      .select(col("qidx"), col("id"), col("feature"))).values.flatten
     s"""{"type":"FeatureCollection","features":[${feats.mkString(",")}]}"""
   }
 
@@ -216,32 +240,27 @@ object AtesPipeline {
   def kmlPlacemarks(tables: Map[String, DataFrame], areaId: Long)
       : Seq[(String, DataFrame)] = {
 
-    def scoped(df: DataFrame, key: String = "area_id") =
-      df.filter(col(key) === areaId)
+    def scoped(table: String) = AtesPipeline.scoped(tables, table, Some(areaId))
 
-    val areas = scoped(tables("areas_vw"), "id").select(col("id"),
+    val areas = scoped("areas_vw").select(col("id"),
       placemark("areas_vw", styleFor("areas_vw", None, None),
         name = col("name")).as("pm"))
 
-    val poi = scoped(tables("points_of_interest")).select(col("id"),
+    val poi = scoped("points_of_interest").select(col("id"),
       placemark("points_of_interest",
         styleFor("points_of_interest", Some(col("type")), None),
         name = col("name"), comments = col("comments"),
         typ = col("type")).as("pm"))
 
-    val roads = scoped(tables("access_roads")).select(col("id"),
+    val roads = scoped("access_roads").select(col("id"),
       placemark("access_roads", styleFor("access_roads", None, None),
         comments = col("description")).as("pm"))
 
-    val paths = scoped(tables("avalanche_paths")).select(col("id"),
+    val paths = scoped("avalanche_paths").select(col("id"),
       placemark("avalanche_paths", styleFor("avalanche_paths", None, None),
         name = col("name")).as("pm"))
 
-    val dp = scoped(tables("decision_points")).alias("dp")
-    val dpw = tables("decision_points_warnings").alias("dpw")
-    val joined = dp.join(dpw,
-      col("dpw.decision_point_id") === col("dp.id"), "inner")
-    val warnified = Warnify.kml(joined,
+    val warnified = Warnify.kml(decisionPointWarnings(tables, Some(areaId)),
       geom = col("dp.geom"),
       typeCol = col("dpw.type"),
       warning = col("dpw.warning"),
@@ -252,7 +271,7 @@ object AtesPipeline {
         placemark("decision_points", styleFor("decision_points", None, None),
           name = col("name"), description = col("description")).as("pm"))
 
-    val zones = scoped(tables("zones")).select(col("id"),
+    val zones = scoped("zones").select(col("id"),
       placemark("zones", styleFor("zones", None, Some(col("class_code"))),
         comments = col("comments"),
         classCode = col("class_code").cast("string")).as("pm"))
@@ -266,20 +285,24 @@ object AtesPipeline {
   /** EP1: assemble the full KML document string (newDocument/newFolder
     * FGU:579-600; doc name = areas_vw first row name, FGU:610-612). The
     * reference appends Document `<name>` after folders and styles — we emit
-    * name first (valid-KML order; content identical). */
+    * name first (valid-KML order; content identical). The six folders and
+    * the doc name are one union, sections 0-5 and -1. */
   def kmlDocument(tables: Map[String, DataFrame], areaId: Long,
       lang: String = "en", iconNumber: Int = 11,
       iconDir: String = "files"): String = {
 
     val branches = kmlPlacemarks(tables, areaId)
-    // doc name = the area's name (FGU:610-612), one small lookup job
-    val docName = tables("areas_vw").filter(col("id") === areaId)
-      .select(col("name")).collect().headOption.map(_.getString(0))
-      .getOrElse("")
+    val docName = scoped(tables, "areas_vw", Some(areaId))
+      .select(lit(-1).as("section"), col("id"), xmlEscape(col("name")))
+    val texts = sections(branches.zipWithIndex.foldLeft(docName) {
+      case (doc, ((_, df), i)) =>
+        doc.union(df.select(lit(i).as("section"), col("id"), col("pm")))
+    })
+    def section(i: Int) = texts.getOrElse(i, Nil)
+    val name = section(-1).headOption.getOrElse("")
 
-    val folders = branches.map { case (table, df) =>
-      val pms = df.orderBy(col("id")).select(col("pm"))
-        .collect().map(_.getString(0)).mkString
+    val folders = branches.zipWithIndex.map { case ((table, _), i) =>
+      val pms = section(i).mkString
       s"<Folder><name>${displayName(table, lang)}</name>$pms</Folder>"
     }.mkString
 
@@ -288,6 +311,6 @@ object AtesPipeline {
     s"""<?xml version="1.0" encoding="UTF-8"?>""" +
       """<kml xmlns="http://www.opengis.net/kml/2.2"""" +
       """ xmlns:gx="http://www.google.com/kml/ext/2.2">""" +
-      s"<Document><name>${docName}</name>$styles$folders</Document></kml>"
+      s"<Document><name>$name</name>$styles$folders</Document></kml>"
   }
 }

@@ -13,9 +13,9 @@ import graft.sinks.Sinks
   * /:lang/:areaId.kmz` → KMZ attachment; `GET /` → help text.
   *
   * A thin shim over the engine (JDK built-in HttpServer, zero deps): route
-  * parameters bind to the plan exactly like the reference's prepared-
-  * statement `$1` (`area_id === lit(areaId)`), each request runs the EP1
-  * pipeline, and the zip streams back with the reference's
+  * parameters bind to the plan like the reference's prepared-statement
+  * `$1` (`area_id` equals a [[graft.plans.BoundLong]]), each request runs
+  * the EP1 pipeline, and the zip streams back with the reference's
   * `attachment; filename=<areaId>.kmz` disposition (FGU:994). Input
   * validation mirrors `returnIfIn`: lang ∉ {en, fr} → 'en' (FGU:963).
   */

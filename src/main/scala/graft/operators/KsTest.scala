@@ -151,12 +151,13 @@ object KsTest {
       .agg(sum(col("__side")).cast("long").as("__ca"),
         (count(lit(1)) - sum(col("__side"))).cast("long").as("__cb"))
       .localCheckpoint(eager = false)
-    // DateType has no double cast — bucket it by its day number instead
-    // (monotone in the date); every other accepted type casts directly.
+    // DateType has no numeric cast under ANSI — bucket it by its day
+    // number instead (monotone in the date); every other accepted type
+    // casts directly.
     val vd =
       if (base.schema("__v").dataType ==
           org.apache.spark.sql.types.DateType)
-        col("__v").cast("int").cast("double")
+        unix_date(col("__v")).cast("double")
       else col("__v").cast("double")
     // Per-KEY bounds, NaN excluded (r17 ADVICE, low): global bounds let
     // one key's census collapse into a single (key, bucket) window

@@ -3,6 +3,11 @@ package graft
 import java.nio.file.Files
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.ates.{AtesPipeline, Fixtures, Styles}
 import graft.sinks.Sinks
 
@@ -67,6 +72,69 @@ class AtesPipelineSpec extends SparkSpec {
     // French display names
     val fr = AtesPipeline.kmlDocument(tables, 357L, "fr")
     assert(fr.contains("<name>Routes d'accès</name>"))
+  }
+
+  test("EP1: a doc name with XML metacharacters is escaped and round-trips") {
+    val raw = "Rogers Pass & <Glacier>"
+    val renamed = tables + ("areas_vw" -> tables("areas_vw").withColumn("name",
+      when(col("id") === 357L, lit(raw)).otherwise(col("name"))))
+    val kml = AtesPipeline.kmlDocument(renamed, 357L, "en")
+    assert(kml.contains("<Document><name>Rogers Pass &amp; &lt;Glacier&gt;</name>"))
+    val dom = javax.xml.parsers.DocumentBuilderFactory.newInstance()
+      .newDocumentBuilder()
+      .parse(new java.io.ByteArrayInputStream(kml.getBytes("UTF-8")))
+    assert(dom.getElementsByTagName("Placemark").getLength ==
+      "<Placemark>".r.findAllIn(kml).size)
+
+    val file = Files.createTempFile("graft", ".kml")
+    Files.writeString(file, kml)
+    val docNames = graft.sources.Tables.readKml(spark, file.toString)
+      .select(col("doc_name")).distinct().collect().map(_.getString(0))
+    Files.delete(file)
+    assert(docNames.toSeq == Seq(raw))
+  }
+
+  test("one kmlDocument and one featureCollection call each run one SQL execution") {
+    def executions(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = n.incrementAndGet()
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = n.incrementAndGet()
+      }
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try { body; ListenerBusDrain(spark.sparkContext) }
+      finally spark.listenerManager.unregister(listener)
+      n.get()
+    }
+    assert(executions(AtesPipeline.kmlDocument(tables, 357L, "en")) == 1)
+    assert(executions(AtesPipeline.featureCollection(tables, 357L)) == 1)
+  }
+
+  test("a new area's documents reuse the generated code of an area served before") {
+    // area 1357 repeats area 357's rows, so both plan to the same shape;
+    // the tables are parquet files, as a server reads them
+    val dir = Files.createTempDirectory("graft_areas")
+    val parquet = tables.map { case (t, df) =>
+      val key = if (t == "areas_vw") "id" else "area_id"
+      val both = if (!df.columns.contains(key)) df
+        else df.unionByName(df.filter(col(key) === 357L).withColumn(key, lit(1357L)))
+      both.write.parquet(dir.resolve(t).toString)
+      t -> spark.read.parquet(dir.resolve(t).toString)
+    }
+    def compiles(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    try {
+      AtesPipeline.kmlDocument(parquet, 357L, "en")
+      AtesPipeline.featureCollection(parquet, 357L)
+      assert(compiles(AtesPipeline.kmlDocument(parquet, 1357L, "en")) == 0)
+      assert(compiles(AtesPipeline.featureCollection(parquet, 1357L)) == 0)
+    } finally {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    }
   }
 
   test("EP1: KMZ sink produces a readable zip with doc.kml (FGU:933-974)") {

@@ -2,12 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.functions.WarnifyAggregator
-import graft.operators.Warnify
 import graft.plans.GraftExtensions
 
 class CustomExprSpec extends SparkSpec {
-  import spark.implicits._
 
   test("native Hash32Expr ≡ the built-in composition (conv∘substring∘md5)") {
     GraftExtensions.register(spark)
@@ -31,31 +28,5 @@ class CustomExprSpec extends SparkSpec {
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
     assert(cg.contains("WholeStageCodegen subtrees"))
     assert(cg.contains("Hash32Expr.hash"), "expected inlined static call")
-  }
-
-  test("typed WarnifyAggregator UDAF matches the built-in warnify composition") {
-    val tables = graft.ates.Fixtures.tables(spark)
-    val dp = tables("decision_points").alias("dp")
-    val dpw = tables("decision_points_warnings").alias("dpw")
-    val joined = dp.join(dpw, col("dpw.decision_point_id") === col("dp.id"))
-
-    val composed = Warnify.geoJson(joined,
-        geom = col("dp.geom"),
-        typeCol = lower(regexp_replace(col("dpw.type"), " ", "-")),
-        warning = col("dpw.warning"),
-        carry = Seq("id"))
-      .select(col("id"), col("warnings"))
-
-    val agg = WarnifyAggregator.udafColumn
-    val viaUdaf = joined
-      .select(col("dp.id").as("id"),
-        lower(regexp_replace(col("dpw.type"), " ", "-")).as("warn_type"),
-        col("dpw.warning").as("warning"))
-      .groupBy(col("id"))
-      .agg(agg(col("warn_type"), col("warning")).as("warnings"))
-
-    val a = composed.as[(Long, String)].collect().sortBy(_._1)
-    val b = viaUdaf.as[(Long, String)].collect().sortBy(_._1)
-    assert(a.sameElements(b))
   }
 }

@@ -49,6 +49,16 @@ class KsTestSpec extends SparkSpec {
     assert(na == n && nb == m && dnum == expected)
   }
 
+  test("a DATE value column gives the same statistic as its day numbers") {
+    val a = (0 until 120).map(i => (i * 37) % 90)
+    val b = (0 until 80).map(i => 30 + (i * 11) % 90)
+    val df = (a.map(d => (1, d)) ++ b.map(d => (0, d))).toDF("side", "day")
+    val days = row(KsTest.twoSample(df, col("side") === 1, col("day")))
+    val dates = row(KsTest.twoSample(df, col("side") === 1,
+      date_add(lit("2024-01-01").cast("date"), col("day"))))
+    assert(dates == days && days._3 > 0)
+  }
+
   test("keyed KS equals the unkeyed test run per key (incl. keys with " +
     "ties and skewed sizes)") {
     val rnd = new scala.util.Random(11)
