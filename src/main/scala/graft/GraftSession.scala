@@ -32,6 +32,9 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // pinned, not inherited: Bootstrap's and q_perm_test's long-sum
+      // overflow checks rely on ANSI arithmetic raising on overflow
+      .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
       // events.parquet carries TIMESTAMP(NANOS), which vanilla Spark rejects;

@@ -1,14 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** The output-boundary contract (r12 verdict task #2, extended r13→r14):
   * no exact-typed (DECIMAL / non-hash BIGINT) output cell may sit where a
   * decimal→double conversion can round differently across engines — i.e.
-  * at or above 2⁵³. Shared by [[graft.OutputContractSpec]] (in-suite
-  * sweeps at sf0.001 and sf0.1-with-headroom) and [[ContractProbe]] (the
-  * one-shot per-round probe at the /tmp/sf1 decade, recorded in PERF.md).
+  * at or above 2⁵³. Shared by the test suite (the one gate pass at
+  * sf0.001, graft.GateSweep, and OutputContractSpec's sf0.1-with-headroom
+  * sweep) and [[ContractProbe]] (the one-shot per-round probe at the
+  * /tmp/sf1 decade, recorded in PERF.md).
   */
 object OutputContract {
 
@@ -39,44 +40,33 @@ object OutputContract {
     ("q_scd2_asof", "probe_us"),
     ("q_scd2_asof", "since_us"))
 
-  /** One gate's exact-typed cells vs `bound`: returns
-    * (violations, maxCellAbs) — maxCellAbs over the gate's checked cells
-    * (None when the gate emits no exact-typed columns). */
-  private def checkGate(spark: SparkSession, dir: String, name: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+  /** One gate's exact-typed cells vs `bound`, read off its collected
+    * `rows`: returns (violations, maxCellAbs) — maxCellAbs over the gate's
+    * checked cells (None when the gate emits no exact-typed cell). `rows`
+    * is by-name: a schema with no exact-typed column never forces it, so
+    * a sweep that has not collected yet skips running such a gate. */
+  def checkCells(name: String, schema: StructType, rows: => Seq[Row],
       bound: BigDecimal): (Seq[String], Option[BigDecimal]) = {
-    val df = fn(spark, dir)
-    val checked = df.schema.fields.zipWithIndex.collect {
+    val checked = schema.fields.zipWithIndex.collect {
       case (f, i) if f.dataType.isInstanceOf[DecimalType] =>
         (f.name, i, "decimal")
       case (f, i) if f.dataType == LongType && !hashCols((name, f.name)) =>
         (f.name, i, "bigint")
     }
-    if (checked.isEmpty) (Nil, None)
-    else {
-      val violations = scala.collection.mutable.ArrayBuffer[String]()
-      var maxAbs = BigDecimal(0)
-      var sawCell = false
-      for (row <- df.collect(); (cn, i, kind) <- checked
-           if !row.isNullAt(i)) {
+    val cells =
+      if (checked.isEmpty) Nil
+      else for (row <- rows; (cn, i, kind) <- checked
+          if !row.isNullAt(i)) yield {
         val v = kind match {
           case "decimal" => BigDecimal(row.getDecimal(i))
           case _ => BigDecimal(row.getLong(i))
         }
-        sawCell = true
-        if (v.abs > maxAbs) maxAbs = v.abs
-        if (v.abs >= bound) violations += s"$name.$cn ($kind) = $v"
+        (cn, kind, v)
       }
-      (violations.distinct.toSeq, if (sawCell) Some(maxAbs) else None)
-    }
+    (cells.collect { case (cn, kind, v) if v.abs >= bound =>
+        s"$name.$cn ($kind) = $v" }.distinct,
+      cells.map(_._3.abs).maxOption)
   }
-
-  /** Sweep every gate at `dir`, collecting exact-typed cells at/above
-    * `bound`. Returns violation strings (empty = contract holds). */
-  def sweep(spark: SparkSession, dir: String, bound: BigDecimal): Seq[String] =
-    SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      checkGate(spark, dir, name, fn, bound)._1
-    }
 
   /** Sweep + per-gate max-cell magnitudes (as a fraction of 2⁵³), for the
     * probe's headroom report. A gate that throws at the probe corpus is
@@ -92,7 +82,8 @@ object OutputContract {
         nameFilters.isEmpty || nameFilters.exists(n.contains) }
       .map { case (name, fn) =>
       try {
-        val (v, m) = checkGate(spark, dir, name, fn, bound)
+        val df = fn(spark, dir)
+        val (v, m) = checkCells(name, df.schema, df.collect().toSeq, bound)
         (v, m.map(x => name -> (x / TwoP53).toDouble))
       } catch { case e: Throwable =>
         val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)

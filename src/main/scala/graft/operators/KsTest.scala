@@ -151,14 +151,17 @@ object KsTest {
       .agg(sum(col("__side")).cast("long").as("__ca"),
         (count(lit(1)) - sum(col("__side"))).cast("long").as("__cb"))
       .localCheckpoint(eager = false)
-    // DateType has no numeric cast under ANSI — bucket it by its day
-    // number instead (monotone in the date); every other accepted type
-    // casts directly.
-    val vd =
-      if (base.schema("__v").dataType ==
-          org.apache.spark.sql.types.DateType)
+    // DateType and TimestampNTZType have no numeric cast under ANSI —
+    // bucket a date by its day number and an NTZ value by its UTC-session
+    // epoch micros (both monotone in the value); every other accepted
+    // type casts directly.
+    val vd = base.schema("__v").dataType match {
+      case org.apache.spark.sql.types.DateType =>
         unix_date(col("__v")).cast("double")
-      else col("__v").cast("double")
+      case org.apache.spark.sql.types.TimestampNTZType =>
+        unix_micros(col("__v").cast("timestamp")).cast("double")
+      case _ => col("__v").cast("double")
+    }
     // Per-KEY bounds, NaN excluded (r17 ADVICE, low): global bounds let
     // one key's census collapse into a single (key, bucket) window
     // partition whenever another key dominates the value range, and a

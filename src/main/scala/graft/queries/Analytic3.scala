@@ -72,7 +72,7 @@ object Analytic3 extends QueryPack {
     // billion-row groups. This plan range-partitions the sort instead
     // (same values, same oracle). The approx_percentile sketch
     // (q_approx_quantile) remains the cheapest path when an error bound
-    // is acceptable (contract-tested in RelationalSpec).
+    // is acceptable (envelope-tested in RelationalSpec).
     "q_percentile_cont" -> ((s, dir) =>
       graft.operators.Percentiles.exactInterpolated(
           t(s, dir, "lineitem"),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.KsTest
 
@@ -49,14 +50,27 @@ class KsTestSpec extends SparkSpec {
     assert(na == n && nb == m && dnum == expected)
   }
 
-  test("a DATE value column gives the same statistic as its day numbers") {
+  /** Statistic of the same day numbers as sides A/B, with `asDay` mapping
+    * the int day column to the value column under test. */
+  private def overDays(asDay: Column => Column) = {
     val a = (0 until 120).map(i => (i * 37) % 90)
     val b = (0 until 80).map(i => 30 + (i * 11) % 90)
     val df = (a.map(d => (1, d)) ++ b.map(d => (0, d))).toDF("side", "day")
-    val days = row(KsTest.twoSample(df, col("side") === 1, col("day")))
-    val dates = row(KsTest.twoSample(df, col("side") === 1,
-      date_add(lit("2024-01-01").cast("date"), col("day"))))
-    assert(dates == days && days._3 > 0)
+    row(KsTest.twoSample(df, col("side") === 1, asDay(col("day"))))
+  }
+  private def asDate(day: Column) =
+    date_add(lit("2024-01-01").cast("date"), day)
+
+  test("a DATE value column gives the same statistic as its day numbers") {
+    val days = overDays(identity)
+    assert(overDays(asDate) == days && days._3 > 0)
+  }
+
+  test("a TIMESTAMP_NTZ value column gives the same statistic as its day " +
+      "numbers") {
+    val days = overDays(identity)
+    assert(overDays(d => asDate(d).cast("timestamp_ntz")) == days &&
+      days._3 > 0)
   }
 
   test("keyed KS equals the unkeyed test run per key (incl. keys with " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 
 /** Output-boundary contract (the r12 verdict's task #2): every gate's
   * emitted cells must hash identically through ANY engine pair, which
@@ -29,58 +29,30 @@ import org.apache.spark.sql.types._
   *   - DOUBLE/FLOAT: intentional doubles, out of scope (their parity
   *     discipline is the shared-text closing-formula rule).
   *
-  * Runs every registered gate at sf0.001 — the execution twin of
-  * PlanSpec's plan sweep. Arrays/structs are not descended into: no
-  * gate emits ARRAY<DECIMAL>, and nested int64 is exact regardless.
+  * The sf0.001 check reads the cells of the one gate pass
+  * ([[GateSweep]]); the sf0.1 headroom sweep runs every gate again.
+  * Arrays/structs are not descended into: no gate emits ARRAY<DECIMAL>,
+  * and nested int64 is exact regardless.
   */
-class OutputContractSpec extends SparkSpec {
+class OutputContractSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val TwoP53 = OutputContract.TwoP53
 
-  /** Captured CodeGenerator compile failures (janino "Code grows beyond
-    * 64 KB" and friends). A failed whole-stage compile silently falls
-    * back to interpreted execution — correct results, hot loop 10×
-    * slower, invisible to every green test — the r13 verdict caught two
-    * such fallbacks in q_media_pipeline's unrolled BMP expressions. The
-    * appender is installed before the sweeps so the two full-gate
-    * executions double as the codegen-health probe; Spark's compile
-    * cache never caches FAILURES, so a failing compile re-logs here even
-    * if another suite hit it first. */
-  private val codegenFailures =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def installCodegenCapture(): Unit = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val appender = new AbstractAppender("graft-codegen-capture", null,
-        null, false, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        val msg = String.valueOf(e.getMessage.getFormattedMessage)
-        if (msg.contains("Failed to compile") ||
-            msg.contains("grows beyond"))
-          codegenFailures.add(msg.linesIterator.take(2).mkString(" | "))
-      }
-    }
-    appender.start()
-    val cfg = ctx.getConfiguration
-    cfg.getLoggerConfig(
-        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")
-      .addAppender(appender, Level.ERROR, null)
-    ctx.updateLoggers()
+  /** The CodeGenerator capture ([[GateSweep.codegenFailures]]) spans
+    * both full passes: attached before this suite's sf0.1 sweep, and
+    * detached after the suite, when both passes are done. */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    GateSweep.attachCodegenCapture()
   }
-  installCodegenCapture()
 
-  /** The allowlist + sweep live in main source ([[OutputContract]]) so the
-    * one-shot sf1 probe ([[ContractProbe]]) asserts the SAME contract the
-    * suite sweeps — a probe with its own copy could drift. */
-  private def sweep(dir: String, bound: BigDecimal): Seq[String] =
-    OutputContract.sweep(spark, dir, bound)
+  override def afterAll(): Unit = {
+    GateSweep.detachCodegenCapture()
+    super.afterAll()
+  }
 
   test("every gate's exact-typed output cells stay below 2^53 at sf0.001") {
-    val violations = sweep(sf, TwoP53)
+    val violations = GateSweep.report(GateSweep.Cells)
     assert(violations.isEmpty,
       s"cells at/above 2^53 — cross-engine hash-fragile; rescale the " +
         s"emitted unit or classify as a 64-bit hash:\n  " +
@@ -95,21 +67,28 @@ class OutputContractSpec extends SparkSpec {
     * cross-engine hash flake, which is exactly what caught the r12
     * dollars² fix sitting at 0.35·2⁵³. (An sf1 probe a decade further
     * up is run one-shot per round and recorded in PERF.md — the suite
-    * sweeps the corpus every build can afford.) */
+    * sweeps the corpus every build can afford.) The headroom sweep lives
+    * in main source ([[OutputContract]]) so the one-shot sf1 probe
+    * ([[ContractProbe]]) asserts the SAME contract. */
   test("every gate's exact-typed output cells keep 10x headroom below " +
       "2^53 at sf0.1 (scale-growth contract)") {
-    val violations = sweep("/root/testdata/sf0.1", TwoP53 / 10)
+    val (violations, _, errs) = OutputContract.sweepWithHeadroom(
+      GateSweep.session, "/root/testdata/sf0.1", TwoP53 / 10)
     assert(violations.isEmpty,
       s"cells above 2^53/10 at sf0.1 — within one decade of the " +
         s"cross-engine hash boundary; rescale the emitted unit:\n  " +
         violations.take(40).mkString("\n  "))
+    assert(errs.isEmpty, s"gates erroring at sf0.1:\n  " +
+      errs.map { case (n, e) => s"$n: $e" }.take(40).mkString("\n  "))
   }
 
   test("no gate trips a CodeGenerator compile failure (silent interpreted " +
       "fallback) across the two full-gate sweeps") {
-    // runs last in-suite (ScalaTest registration order): by now both
-    // sweeps above have EXECUTED every registered gate at two scales
-    val seen = codegenFailures.toArray(Array.empty[String]).distinct
+    // runs last in-suite (ScalaTest registration order): the sf0.1 sweep
+    // above has run; forcing the sf0.001 pass is a no-op once any suite
+    // has asked for it
+    GateSweep.violations
+    val seen = GateSweep.codegenFailures.toArray(Array.empty[String]).distinct
     assert(seen.isEmpty,
       s"codegen compile failures logged during the sweeps — these plans " +
         s"run interpreted (10x slower hot loops), split the offending " +

@@ -21,15 +21,14 @@ class PlanSpec extends SparkSpec {
     // impossible; cross-pack collisions are the silent-shadowing class
     // (one pack's impl+oracle pair wins, the other becomes dead code with
     // the gate still green). mergeUnique raises on collision — this test
-    // both exercises that guard and pins the count arithmetic.
+    // both exercises that guard and pins the count arithmetic. (Oracles
+    // without impls: RelationalSpec's key-set test.)
     val implKeys = SparkEntry.packs.flatMap(_.defs.keys)
     val oracleKeys = SparkEntry.packs.flatMap(_.oracle.keys)
     assert(SparkEntry.queries.size === implKeys.size,
       "pack impl keys collide across packs")
     assert(SparkEntry.oracleSql.size === oracleKeys.size,
       "pack oracle keys collide across packs")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without impls: $orphans")
   }
 
   test("q_scan_project: filter pushed to parquet, schema pruned to 3 columns") {
@@ -122,49 +121,12 @@ class PlanSpec extends SparkSpec {
 
   test("no query plans an unpartitioned window over unbounded input " +
       "(sweep of all 200)") {
-    // WindowExec with an empty partition spec sorts the WHOLE input in one
-    // task — the canonical 100 TB scale-killer. A handful of queries run a
-    // window over a PRE-BOUNDED input (post-limit top-20 rerank, a ≤32-row
-    // calendar spine, per-partition sketch rows), where the single
-    // partition holds a few dozen rows by construction — those are waived
-    // explicitly here; anything else is a regression.
-    // q_sort_nulls: the window's input is bounded by the pushed literal
-    // predicate o_orderkey < 300 — a fixed ~75 rows at ANY scale factor
-    // (the keyspace below 300 does not grow with data volume), so its
-    // single partition is a deliberate few-dozen-row null-ordering probe.
-    // q_tpch_q15: the global-max window runs on the bucket-maxima
-    // survivor frame — ≤1024 rows + global-max ties by construction at
-    // ANY scale (the per-bucket max window upstream is 1024-way
-    // partitioned; that's the stage that sees the supplier-sized frame)
-    // q_hits (round 17): the max-rescale windows run on the per-round
-    // (nation, raw) frame — ≤25 rows by the nation-dim schema bound at
-    // ANY corpus scale; the inline window replaced a scalar subquery
-    // whose duplication forced one eager checkpoint job per half-step
-    val waived = Set("q_sort_nulls", "q_tpch_q15", "q_hits")
-    val cartesian = scala.collection.mutable.ArrayBuffer[String]()
-    val guilty = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-      scala.util.Try {
-        val p = SparkEntry.queries(name)(spark, sf).queryExecution
-          .explainString(ExplainMode.fromString("simple"))
-        // piggyback on the same plan build (round 13): a CartesianProduct
-        // anywhere is the other generic 100 TB scale-killer — every
-        // crossJoin in the repo must ride a broadcast 1-row/dim frame
-        // (BroadcastNestedLoopJoin), never a partitioned cartesian
-        if (p.contains("CartesianProduct")) cartesian += name
-        // a global window physically plans Window ← Sort ← Exchange
-        // SinglePartition: flag any SinglePartition exchange with a Window
-        // operator within the 3 lines above it
-        val lines = p.linesIterator.toIndexedSeq
-        lines.indices.exists { i =>
-          lines(i).contains("Exchange SinglePartition") &&
-            (math.max(0, i - 3) until i).exists(j => lines(j).contains("Window"))
-        }
-      }.getOrElse(false) // build failures surface in their own suites
-    }
-    assert(guilty.forall(waived.contains),
-      s"unwaived single-partition windows in: ${guilty.filterNot(waived.contains)}")
-    assert(cartesian.isEmpty,
-      s"CartesianProduct in: ${cartesian.mkString(", ")}")
+    // read off the one gate pass (GateSweep): each gate's initial AQE
+    // plan, before its collect, checked for a CartesianProduct and for an
+    // unwaived single-partition window (the waived set and its reasons
+    // live there); a gate that fails to build is reported, not skipped
+    val violations = GateSweep.report(GateSweep.Plan)
+    assert(violations.isEmpty, violations.mkString("\n"))
   }
 
   test("q_join_semi/anti plan semi/anti joins, not join+filter") {

@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-
 /** Enforced fact-scan budgets for EVERY gate (round 16 — the r15 sweep's
   * classification promoted from scaladoc prose to data the build checks).
   *
-  * The reuse-aware sweep walks each gate's AQE-FINAL physical plan
+  * The reuse-aware walk reads each gate's AQE-FINAL physical plan
   * (unwrapping adaptive/stage nodes, stopping at ReusedExchangeExec) and
   * counts executed scans of the five fact tables. Any gate scanning a
   * fact table more than once must appear in [[ScanBudget.allow]] with a
@@ -30,11 +26,12 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   * subtree (the r14 TPC-H CTE inlining, q_dsir's doubled gram pass,
   * q_bm25's per-consumer re-tokenize) — has NO allowlist representation:
   * a gate that develops one either exceeds its budget or shows up
-  * unclassified, and this spec goes red. ScanSweepSpec separately pins
-  * the stricter ≤1-fact-scan budget for the TPC-H 22.
+  * unclassified, and [[ScanBudgetSpec]] goes red. No TPC-H gate has an
+  * entry, so each of the 22 scans lineitem and orders at most once.
   *
-  * Streaming gates are swept too (round 17): what this spec sees for
-  * them is the drained batch-side frame — see the sweep-test comment.
+  * The walk runs in the one gate pass ([[GateSweep]]). Streaming gates
+  * are swept too (round 17): what the sweep sees for them is the drained
+  * batch-side frame — see [[GateSweep.violations]].
   */
 object ScanBudget {
 
@@ -153,73 +150,11 @@ object ScanBudget {
 
 class ScanBudgetSpec extends SparkSpec {
 
-  private val facts = Seq("lineitem", "orders", "events", "documents",
-    "embeddings")
-
-  private def scans(p: SparkPlan): Seq[String] = p match {
-    case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-    case q: QueryStageExec => scans(q.plan)
-    case _: ReusedExchangeExec => Seq.empty
-    case f: FileSourceScanExec =>
-      f.relation.location.rootPaths.map(_.getName.stripSuffix(".parquet"))
-    case other =>
-      other.children.flatMap(scans) ++ other.subqueries.flatMap(scans)
-  }
-
-  /** Budget violations for one executed gate frame — empty when within
-    * its classified budgets. */
-  private def violations(g: String,
-      df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    val counts = scans(df.queryExecution.executedPlan)
-      .groupBy(identity).map { case (k, v) => k -> v.size }
-      .filter { case (k, v) => facts.contains(k) && v > 1 }
-    counts.toSeq.flatMap { case (table, n) =>
-      ScanBudget.allow.getOrElse(g, Seq.empty).find(_._1 == table) match {
-        case None => Seq(
-          s"$g scans $table $n x but is UNCLASSIFIED - either fix the " +
-            "redundant recompute (class 4) or add a classified budget")
-        case Some((_, budget, _)) if n > budget => Seq(
-          s"$g scans $table $n x, over its classified budget of $budget")
-        case _ => Seq.empty
-      }
-    }
-  }
-
   test("every gate stays within its classified fact-scan budget " +
       "(reuse-aware, AQE-final)") {
-    // Own cloned session: suites run in parallel in one JVM and several
-    // (PlanSpec, the bucketing specs) toggle autoBroadcastJoinThreshold
-    // on the shared session mid-flight — a gate collected during such a
-    // window plans without broadcast and can execute extra scans (seen
-    // once as a full-suite-only flake). newSession() shares the context
-    // and catalog but owns its SQLConf, so the counts here are immune.
-    // Gates built on memoized artifact frames keep the ORIGINAL
-    // session, so the clone can't shield them — a violation is
-    // therefore re-collected once before it counts: a real class-4
-    // recompute reproduces deterministically, a transient conf window
-    // does not.
-    // Round 17 (r16 verdict #5): the sweep covers ALL gates, streaming
-    // included — the former `!g.startsWith("q_stream")` code filter was
-    // a blanket hole in an otherwise data-driven discipline. For a
-    // streaming gate the frame returned (and swept) here is its DRAINED
-    // batch side — the memory-sink readout plus any batch frames the
-    // gate joins against it (e.g. q_stream_drift's baseline scan), which
-    // is exactly where a silent batch-side class-4 recompute would land;
-    // the per-micro-batch source plans are owned by StreamExecution and
-    // are pinned separately (StreamingSpec), not reachable from the
-    // returned frame. A streaming gate whose batch side develops a
-    // redundant fact scan now shows up UNCLASSIFIED like any other gate.
-    val s2 = spark.newSession()
-    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (g <- SparkEntry.queries.keys.toSeq.sorted) {
-      val df = SparkEntry.queries(g)(s2, sf)
-      df.collect()
-      if (violations(g, df).nonEmpty) {
-        val retry = SparkEntry.queries(g)(s2, sf)
-        retry.collect()
-        failures ++= violations(g, retry)
-      }
-    }
+    // read off the one gate pass: each gate's AQE-final plan after its
+    // collect, a violation re-collected once before it counts
+    val failures = GateSweep.report(GateSweep.Scans)
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
@@ -233,7 +168,7 @@ class ScanBudgetSpec extends SparkSpec {
     val doubled = d.select(sum(col("doc_id")).as("a"))
       .crossJoin(d.select(sum(col("n_chars")).as("b")))
     doubled.collect()
-    val unclassified = violations("q_not_a_gate", doubled)
+    val unclassified = GateSweep.scanViolations("q_not_a_gate", doubled)
     assert(unclassified.exists(_.contains("UNCLASSIFIED")),
       s"an unlisted double-scan must be red, got: $unclassified")
     // a classified gate whose budget is exceeded also goes red:
@@ -241,7 +176,7 @@ class ScanBudgetSpec extends SparkSpec {
     val tripled = doubled
       .crossJoin(d.select(sum(col("doc_id") * 2).as("c")))
     tripled.collect()
-    val over = violations("q_woe_iv", tripled)
+    val over = GateSweep.scanViolations("q_woe_iv", tripled)
     assert(over.exists(_.contains("over its classified budget")),
       s"an over-budget scan must be red, got: $over")
   }
