@@ -6,10 +6,10 @@ import org.apache.spark.sql.types._
 /** The output-boundary contract (r12 verdict task #2, extended r13→r14):
   * no exact-typed (DECIMAL / non-hash BIGINT) output cell may sit where a
   * decimal→double conversion can round differently across engines — i.e.
-  * at or above 2⁵³. Shared by the test suite (the one gate pass at
-  * sf0.001, graft.GateSweep, and OutputContractSpec's sf0.1-with-headroom
-  * sweep) and [[ContractProbe]] (the one-shot per-round probe at the
-  * /tmp/sf1 decade, recorded in PERF.md).
+  * at or above 2⁵³. Shared by the test suite (the one gate pass,
+  * graft.GateSweep, at sf0.001 against 2⁵³ and at sf0.1 against 2⁵³/10)
+  * and [[ContractProbe]] (the one-shot per-round probe at the /tmp/sf1
+  * decade, recorded in PERF.md).
   */
 object OutputContract {
 
@@ -44,7 +44,7 @@ object OutputContract {
     * `rows`: returns (violations, maxCellAbs) — maxCellAbs over the gate's
     * checked cells (None when the gate emits no exact-typed cell). `rows`
     * is by-name: a schema with no exact-typed column never forces it, so
-    * a sweep that has not collected yet skips running such a gate. */
+    * a caller that has not collected yet skips running such a gate. */
   def checkCells(name: String, schema: StructType, rows: => Seq[Row],
       bound: BigDecimal): (Seq[String], Option[BigDecimal]) = {
     val checked = schema.fields.zipWithIndex.collect {
@@ -67,14 +67,30 @@ object OutputContract {
         s"$name.$cn ($kind) = $v" }.distinct,
       cells.map(_._3.abs).maxOption)
   }
+}
+
+/** One-shot contract probe: sweeps every gate at an arbitrary corpus
+  * (default the /tmp/sf1 decade-up probe data) and prints the violations
+  * plus the gates closest to the 2⁵³ boundary — the per-round evidence
+  * PERF.md records so "the contract holds a decade above replay scale"
+  * is a measurement, not an extrapolation.
+  *
+  * Usage: runMain graft.ContractProbe [dir=/tmp/sf1] [boundDiv=1] [name...]
+  * (boundDiv divides 2⁵³, e.g. 10 asserts the sf0.1-style headroom rule;
+  * trailing name substrings restrict the sweep for iteration.)
+  */
+object ContractProbe {
+  import OutputContract.{TwoP53, checkCells}
 
   /** Sweep + per-gate max-cell magnitudes (as a fraction of 2⁵³), for the
     * probe's headroom report. A gate that throws at the probe corpus is
     * returned in the third seq (name → error) instead of aborting the
     * sweep — at a decade above the replay envelope an individual data
-    * surprise must not hide every other gate's headroom reading. */
-  def sweepWithHeadroom(spark: SparkSession, dir: String, bound: BigDecimal,
-      nameFilters: Seq[String] = Nil)
+    * surprise must not hide every other gate's headroom reading. (The
+    * test suite does not run this loop: its one gate pass, GateSweep,
+    * checks the same contract at sf0.001 and sf0.1.) */
+  private def sweep(spark: SparkSession, dir: String, bound: BigDecimal,
+      nameFilters: Seq[String])
       : (Seq[String], Seq[(String, Double)], Seq[(String, String)]) = {
     val errs = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -96,19 +112,7 @@ object OutputContract {
     }
     (all.flatMap(_._1), all.flatMap(_._2), errs.toSeq)
   }
-}
 
-/** One-shot contract probe: sweeps every gate at an arbitrary corpus
-  * (default the /tmp/sf1 decade-up probe data) and prints the violations
-  * plus the gates closest to the 2⁵³ boundary — the per-round evidence
-  * PERF.md records so "the contract holds a decade above replay scale"
-  * is a measurement, not an extrapolation.
-  *
-  * Usage: runMain graft.ContractProbe [dir=/tmp/sf1] [boundDiv=1] [name...]
-  * (boundDiv divides 2⁵³, e.g. 10 asserts the sf0.1-style headroom rule;
-  * trailing name substrings restrict the sweep for iteration.)
-  */
-object ContractProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")
     val boundDiv = args.lift(1).map(BigDecimal(_)).getOrElse(BigDecimal(1))
@@ -119,9 +123,8 @@ object ContractProbe {
         shufflePartitions = cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val bound = OutputContract.TwoP53 / boundDiv
     val (violations, headroom, errs) =
-      OutputContract.sweepWithHeadroom(spark, dir, bound, nameFilters)
+      sweep(spark, dir, TwoP53 / boundDiv, nameFilters)
     val top = headroom.sortBy(-_._2).take(20)
       .map { case (n, f) => f"$n%-28s ${f}%.6f" }
     println(s"[probe] dir=$dir bound=2^53/${boundDiv} gates=${headroom.length}")

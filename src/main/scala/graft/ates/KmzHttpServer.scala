@@ -17,7 +17,10 @@ import graft.sinks.Sinks
   * `$1` (`area_id` equals a [[graft.plans.BoundLong]]), each request runs
   * the EP1 pipeline, and the zip streams back with the reference's
   * `attachment; filename=<areaId>.kmz` disposition (FGU:994). Input
-  * validation mirrors `returnIfIn`: lang ∉ {en, fr} → 'en' (FGU:963).
+  * validation mirrors `returnIfIn`: lang ∉ {en, fr} → 'en' (FGU:963). An
+  * id that does not fit a Long is a 400; a failure while serving is a 500
+  * whose body is a fixed message (the cause goes to stderr, not to the
+  * client).
   */
 class KmzHttpServer(spark: SparkSession, tables: Map[String, DataFrame],
     port: Int = 0) {
@@ -29,6 +32,8 @@ class KmzHttpServer(spark: SparkSession, tables: Map[String, DataFrame],
     try {
       ex.getRequestURI.getPath match {
         case "/" => respond(ex, 200, "help", "text/plain")
+        case Route(_, areaIdStr) if areaIdStr.toLongOption.isEmpty =>
+          respond(ex, 400, "bad area id", "text/plain")
         case Route(langRaw, areaIdStr) =>
           val lang = if (Seq("en", "fr").contains(langRaw)) langRaw else "en"
           val areaId = areaIdStr.toLong
@@ -45,7 +50,9 @@ class KmzHttpServer(spark: SparkSession, tables: Map[String, DataFrame],
         case _ => respond(ex, 404, "not found", "text/plain")
       }
     } catch {
-      case e: Throwable => respond(ex, 500, s"error: ${e.getMessage}", "text/plain")
+      case e: Throwable =>
+        System.err.println(s"[kmz-http] ${ex.getRequestURI.getPath}: $e")
+        respond(ex, 500, "internal error", "text/plain")
     }
   })
 

@@ -51,10 +51,6 @@ object GeoFunctions {
   def st_linestring(points: Column): Column =
     struct(lit("LineString").as("kind"), array(array(points)).as("coordinates"))
 
-  /** Polygon from an ARRAY<ARRAY<ARRAY<DOUBLE>>> of rings (outer first). */
-  def st_polygon(rings: Column): Column =
-    struct(lit("Polygon").as("kind"), array(rings).as("coordinates"))
-
   // -- accessors --------------------------------------------------------------
 
   private def kind(g: Column) = g.getField("kind")

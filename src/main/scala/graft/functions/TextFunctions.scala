@@ -76,12 +76,6 @@ object TextFunctions {
   def charShingles(c: Column, k: Int): Column =
     charShinglesOfNormalized(normalizeText(c), k)
 
-  def sqlCharShingles(expr: String, k: Int): String = {
-    val n = sqlNormalizeText(expr)
-    s"list_transform(generate_series(1, greatest(length($n) - ${k - 1}, 1)), " +
-      s"i -> substr($n, i, $k))"
-  }
-
   /** Word n-grams over the token array. slice+array_join measured 3× faster
     * than per-element element_at+concat_ws at sf0.1 (slice copies only n
     * elements; the per-access lambda/bounds machinery dominates the

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Unified per-(application, corpus) artifact memo (round 16 — the one
   * discipline behind [[GraphArtifacts]], [[StatArtifacts]] and
   * TextOps.mutantClusters, which had grown into three copies of the same
-  * ConcurrentHashMap + isStopped + localCheckpoint + env-bypass pattern).
+  * ConcurrentHashMap + isStopped + localCheckpoint pattern).
   *
   * An "artifact" is a small build-once frame (edge list, threshold table,
   * cluster labeling) that several gates consume: the session-local stand-in
@@ -26,23 +26,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - the corpus dir is assumed IMMUTABLE for the life of an application:
   *    regenerating a dir in place within one application serves the stale
   *    artifact (the same assumption every localCheckpoint leaf makes).
-  *
-  * Bypass (A/B for PERF.md, never set by the driver or the suite):
-  * `SPARK_GRAFT_NO_ARTIFACT_MEMO` disables every family; each family also
-  * has its own var (`SPARK_GRAFT_NO_GRAPH_MEMO`, `SPARK_GRAFT_NO_STAT_MEMO`,
-  * `SPARK_GRAFT_NO_TEXT_MEMO`) so one family's A/B doesn't silently toggle
-  * another's (r15 advisor: the text memo used to piggyback on the stat
-  * var).
   */
 object Artifacts {
 
   private val cache =
     new ConcurrentHashMap[(String, String, String), DataFrame]()
 
-  def memo(s: SparkSession, dir: String, kind: String, familyEnv: String)
+  def memo(s: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_NO_ARTIFACT_MEMO") ||
-        sys.env.contains(familyEnv)) return build
     val key = (s.sparkContext.applicationId, dir, kind)
     val cached = cache.get(key)
     if (cached != null && !cached.sparkSession.sparkContext.isStopped)

@@ -110,12 +110,12 @@ object BucketedGraph {
 
   /** The persistent oriented edge table bucketed by source endpoint. */
   def edgesByS(s: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(s, dir, "graph:bedges_s", "SPARK_GRAFT_NO_GRAPH_MEMO")(
+    Artifacts.memo(s, dir, "graph:bedges_s")(
       ensure(s, dir, "s"))
 
   /** The persistent oriented edge table bucketed by target endpoint. */
   def edgesByT(s: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(s, dir, "graph:bedges_t", "SPARK_GRAFT_NO_GRAPH_MEMO")(
+    Artifacts.memo(s, dir, "graph:bedges_t")(
       ensure(s, dir, "t"))
 
   /** Out-adjacency (x, nbrs) of the persistent s-bucketed edge table —
@@ -127,7 +127,7 @@ object BucketedGraph {
     * identical oriented frame); the triangle twins consume this one so
     * the whole structural family reads the persistent base. */
   def outAdjacency(s: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(s, dir, "graph:bedges_adj", "SPARK_GRAFT_NO_GRAPH_MEMO")(
+    Artifacts.memo(s, dir, "graph:bedges_adj")(
       edgesByS(s, dir)
         .groupBy(col("s").as("x"))
         .agg(sort_array(collect_list(col("t"))).as("nbrs"))

@@ -31,16 +31,13 @@ import org.apache.spark.sql.functions._
   * Memoization delegates to the unified [[Artifacts.memo]]: keyed by
   * (applicationId, dir, kind) so distinct corpora and distinct Spark
   * applications never share state; a cached entry from a stopped context
-  * is rebuilt, not reused; `SPARK_GRAFT_NO_GRAPH_MEMO` (or the global
-  * `SPARK_GRAFT_NO_ARTIFACT_MEMO`) bypasses for PERF.md A/Bs —
-  * reproducing the pre-r14 regime where every gate rebuilds its frame
-  * from the fact table. Never set by the driver or the suite.
+  * is rebuilt, not reused.
   */
 object GraphArtifacts {
 
   private def memo(s: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame =
-    Artifacts.memo(s, dir, "graph:" + kind, "SPARK_GRAFT_NO_GRAPH_MEMO")(build)
+    Artifacts.memo(s, dir, "graph:" + kind)(build)
 
   /** Distinct (ok, pk) co-purchase membership, census-capped
     * ([[BasketGraph.cappedItems]] — oversized baskets dropped whole)

@@ -38,11 +38,4 @@ object Salted {
       .agg(aggs.head._2(s"__p_${aggs.head._3}").as(aggs.head._3),
         aggs.tail.map(a => a._2(s"__p_${a._3}").as(a._3)): _*)
   }
-
-  /** Salted sum/count convenience: the common skewed-metrics shape. */
-  def sumCount(df: DataFrame, key: Column, valueCol: Column,
-      saltFactor: Int = 16): DataFrame =
-    aggregate(df, key, saltFactor, Seq(
-      (sum(valueCol), (c: String) => sum(col(c)), "total"),
-      (count(lit(1)), (c: String) => sum(col(c)), "n")))
 }

@@ -20,14 +20,13 @@ import org.apache.spark.sql.functions._
   * Semantics are IDENTICAL to the per-gate builds these replace — the
   * same [[Percentiles.exactDisc]] calls on the same projection; only the
   * redundant recomputation is gone. Memoization delegates to the unified
-  * [[Artifacts.memo]] (keyed (applicationId, dir, kind), dead-app sweep,
-  * `SPARK_GRAFT_NO_STAT_MEMO` / `SPARK_GRAFT_NO_ARTIFACT_MEMO` bypass).
+  * [[Artifacts.memo]] (keyed (applicationId, dir, kind), dead-app sweep).
   */
 object StatArtifacts {
 
   private def memo(s: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame =
-    Artifacts.memo(s, dir, "stat:" + kind, "SPARK_GRAFT_NO_STAT_MEMO")(build)
+    Artifacts.memo(s, dir, "stat:" + kind)(build)
 
   /** The shared (g, v) projection: returnflag, extendedprice. */
   def prices(s: SparkSession, dir: String): DataFrame =

@@ -443,8 +443,7 @@ object StatOps extends QueryPack {
     "q_bm25" -> ((s, dir) => {
       val qterms = Seq("spark", "dup")
       def d = t(s, dir, "documents")
-      val lens = graft.operators.Artifacts.memo(s, dir,
-          "stat:bm25-lens", "SPARK_GRAFT_NO_STAT_MEMO") {
+      val lens = graft.operators.Artifacts.memo(s, dir, "stat:bm25-lens") {
         d.select(col("doc_id"), tokenCount(col("text"))
           .cast("long").as("len"))
           .localCheckpoint()
@@ -452,8 +451,7 @@ object StatOps extends QueryPack {
       val stats = lens.agg(count(lit(1)).as("n_docs"),
         sum(col("len")).as("sum_len"))
       val tf = graft.operators.Artifacts.memo(s, dir,
-          s"stat:bm25-tf:${qterms.mkString(",")}",
-          "SPARK_GRAFT_NO_STAT_MEMO") {
+          s"stat:bm25-tf:${qterms.mkString(",")}") {
         d.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
           .filter(col("term").isin(qterms: _*))
           .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))

@@ -56,13 +56,10 @@ object TextOps extends QueryPack {
     * session. The labeling is the write-once cluster-assignment table a
     * pipeline materializes between its detect and apply stages; here it
     * memoizes per (application, corpus) as a checkpointed leaf via the
-    * unified [[graft.operators.Artifacts.memo]] (bypass:
-    * `SPARK_GRAFT_NO_TEXT_MEMO` — its own var since round 16; it used to
-    * piggyback on the stat family's switch).
+    * unified [[graft.operators.Artifacts.memo]].
     * Semantics identical to the per-gate builds this replaces. */
   private[queries] def mutantClusters(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Artifacts.memo(s, dir, "text:mutant-clusters",
-        "SPARK_GRAFT_NO_TEXT_MEMO") {
+    graft.operators.Artifacts.memo(s, dir, "text:mutant-clusters") {
       val d = withMutants(docs(s, dir))
       val pairs = Dedup.minhashPairs(d, col("text"), col("doc_id"),
         shingleSize = 3, k = 16, bands = 4, threshold = 0.5)

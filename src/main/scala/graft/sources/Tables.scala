@@ -56,10 +56,6 @@ object Tables {
   def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** Register all corpus tables as temp views (for spark.sql entry points). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    corpus.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
   /** S1 — live-database scan, the engine form of the reference's pg
     * prepared-statement source (`/root/reference/src/from-ground-up.js:
     * 149-163`). Filters and projections on the returned frame push down

@@ -479,8 +479,7 @@ object EventStreams {
     * key cardinality (a handful of event types / user hash buckets here),
     * independent of the batch shuffle width. At scale this is the per-query
     * `spark.sql.shuffle.partitions` a stream launches with. */
-  val streamStatePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse(8)
+  val streamStatePartitions: Int = 8
 
   /** Harness checkpoints are throwaway (each invocation drains a bounded
     * source once and deletes the dir) — put them on tmpfs when the box has

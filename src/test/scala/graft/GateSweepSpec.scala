@@ -7,15 +7,17 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
-/** Every gate's per-gate contracts, from ONE build and ONE collect of
-  * each gate at sf0.001, run once per JVM by whichever suite asks first
-  * (the sf0.1 headroom sweep in [[OutputContractSpec]] is the one other
-  * full pass). Per gate, in this order:
+/** Every gate's per-gate contracts from ONE visit to each gate: one
+  * build and one collect at sf0.001, then straight after one build and
+  * one collect of the same gate at sf0.1. The pass runs once per JVM, for
+  * whichever suite asks first, and it is the suite's only loop over the
+  * gates. Per gate, in this order:
   *
   *  1. [[Plan]], BEFORE execution — the `simple` explain of an unexecuted
   *     frame is the initial AQE plan (after `collect` it would show the
@@ -25,12 +27,18 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   *  3. [[Cells]]: exact-typed cells below 2⁵³
   *     ([[OutputContract.checkCells]]) on the collected rows;
   *  4. [[Scans]], AFTER execution: the AQE-final reuse-aware fact-scan
-  *     walk against [[ScanBudget.allow]].
+  *     walk against [[ScanBudget.allow]];
+  *  5. [[Headroom]]: the same gate built at [[HeadroomDir]] (sf0.1), its
+  *     exact-typed cells checked against 2⁵³/10. Back to back with the
+  *     sf0.001 build, most of the classes it needs are still in Spark's
+  *     100-entry codegen cache; a second full sweep after the first
+  *     recompiled almost all of them.
   *
-  * A gate that throws is a [[Threw]] violation, not an abort. Each rule
-  * is asserted by the suite that owns it — PlanSpec, RelationalSpec,
-  * OutputContractSpec, ScanBudgetSpec — and each of those also reports
-  * every gate that threw.
+  * A gate that throws at sf0.001 is a [[Threw]] violation, not an abort;
+  * a throw at sf0.1 is a [[Headroom]] violation only. Each rule is
+  * asserted by the suite that owns it — PlanSpec, RelationalSpec,
+  * OutputContractSpec (Cells and Headroom), ScanBudgetSpec — and each of
+  * those also reports every gate that threw at sf0.001.
   */
 object GateSweep {
 
@@ -39,11 +47,21 @@ object GateSweep {
   case object Rows extends Rule
   case object Cells extends Rule
   case object Scans extends Rule
+  case object Headroom extends Rule
   case object Threw extends Rule
 
   final case class Violation(rule: Rule, msg: String)
 
   private val TwoP53 = OutputContract.TwoP53
+
+  /** The largest on-disk corpus (the sf0.1 directory beside the suite's
+    * sf0.001 one), where [[Headroom]] is checked: a cell growing ∝sf
+    * (sums) or ∝sf² (cross-terms) passes at sf0.001 yet crosses 2⁵³ at
+    * the scales the cross-engine parity checks hash, so at sf0.1 an exact
+    * cell must stay a decade below the boundary (2⁵³/10). */
+  val HeadroomDir: String =
+    new java.io.File(new java.io.File(SparkSpec.sf).getParentFile, "sf0.1")
+      .getPath
 
   /** Own cloned session: newSession() shares the context and catalog but
     * owns its SQLConf, so a conf another suite left behind (several
@@ -60,11 +78,11 @@ object GateSweep {
     * back to interpreted execution — correct results, hot loop 10×
     * slower, invisible to every green test — the r13 verdict caught two
     * such fallbacks in q_media_pipeline's unrolled BMP expressions. The
-    * appender is attached before either full-gate pass (by the pass
-    * below and by [[OutputContractSpec]]), so the two executions double
-    * as the codegen-health probe; Spark's compile cache never caches
-    * FAILURES, so a failing compile re-logs here even if another suite
-    * hit it first. [[OutputContractSpec]] asserts it and detaches it. */
+    * appender is attached for the length of the pass below, so its
+    * executions at both scales double as the codegen-health probe;
+    * Spark's compile cache never caches FAILURES, so a failing compile
+    * re-logs here even if another suite hit it first.
+    * [[OutputContractSpec]] asserts it. */
   val codegenFailures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private val capture = new AbstractAppender("graft-codegen-capture", null,
       null, false, Property.EMPTY_ARRAY) {
@@ -82,23 +100,21 @@ object GateSweep {
     ctx.updateLoggers()
   }
 
-  private var attached = false
-
-  /** Attaches the capture once; the pass below calls it first. */
-  def attachCodegenCapture(): Unit = synchronized {
-    if (!attached) {
-      capture.start()
-      onCodegenLog(_.addAppender(capture, Level.ERROR, null))
-      attached = true
-    }
-  }
-
-  def detachCodegenCapture(): Unit = synchronized {
-    if (attached) {
+  /** `f` with the capture attached to the CodeGenerator logger. */
+  private def capturingCodegen[T](f: => T): T = {
+    capture.start()
+    onCodegenLog(_.addAppender(capture, Level.ERROR, null))
+    try f
+    finally {
       onCodegenLog(_.removeAppender(capture.getName))
       capture.stop()
     }
   }
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Classes compiled by every [[checkGate]]'s sf0.1 step so far. */
+  private val headroomCompileCount = new java.util.concurrent.atomic.AtomicLong
 
   /** Gates whose global window runs over a PRE-BOUNDED input, where the
     * single partition holds a few dozen rows by construction:
@@ -169,34 +185,49 @@ object GateSweep {
     }
   }
 
-  /** Every per-gate rule on one build and one collect of `build()`, in
-    * the order the object doc gives; a scan violation rebuilds and
-    * re-collects once before it counts. A throw is a violation, and what
-    * was found before it is kept. */
-  def checkGate(g: String, build: () => DataFrame): Seq[Violation] = {
+  private def threw(what: String, e: Throwable): String =
+    s"$what ${e.getClass.getSimpleName}: " +
+      String.valueOf(e.getMessage).linesIterator.take(1).mkString.take(200)
+
+  /** Every per-gate rule on one build and one collect of `build(dir)` at
+    * sf0.001, then at [[HeadroomDir]], in the order the object doc gives;
+    * a scan violation rebuilds and re-collects once before it counts. A
+    * throw at either scale is a violation, and what was found before it
+    * is kept. */
+  def checkGate(g: String, build: String => DataFrame): Seq[Violation] = {
     val found = ArrayBuffer.empty[Violation]
     def add(rule: Rule, msgs: Seq[String]): Unit =
       found ++= msgs.map(Violation(rule, _))
     try {
-      val df = build()
+      val df = build(SparkSpec.sf)
       add(Plan, planViolations(g,
         df.queryExecution.explainString(ExplainMode.fromString("simple"))))
       val rows = df.collect().toSeq
       add(Rows, Option.when(rows.isEmpty)(s"$g returned no rows").toSeq)
       add(Cells, OutputContract.checkCells(g, df.schema, rows, TwoP53)._1)
       if (scanViolations(g, df).nonEmpty) {
-        val retry = build()
+        val retry = build(SparkSpec.sf)
         retry.collect()
         add(Scans, scanViolations(g, retry))
       }
+    } catch { case NonFatal(e) => add(Threw, Seq(threw(s"$g threw", e))) }
+    val before = compiles
+    try {
+      val df = build(HeadroomDir)
+      // rows are by-name: a gate with no exact-typed column is not
+      // collected at sf0.1
+      add(Headroom, OutputContract.checkCells(g, df.schema,
+        df.collect().toSeq, TwoP53 / 10)._1)
     } catch { case NonFatal(e) =>
-      add(Threw, Seq(s"$g threw ${e.getClass.getSimpleName}: " +
-        String.valueOf(e.getMessage).linesIterator.take(1).mkString.take(200)))
+      add(Headroom, Seq(threw(s"$g threw at sf0.1", e)))
     }
+    headroomCompileCount.addAndGet(compiles - before)
     found.toSeq
   }
 
-  /** The one pass over every registered gate at sf0.001. Streaming gates
+  /** The one pass over every registered gate, each visited at sf0.001
+    * and then at sf0.1 ([[checkGate]]), inside the CodeGenerator capture;
+    * it prints how many classes its sf0.1 steps compiled. Streaming gates
     * included (round 17): for a streaming gate the frame returned (and
     * checked) here is its DRAINED batch side — the memory-sink readout
     * plus any batch frames the gate joins against it (e.g.
@@ -204,14 +235,19 @@ object GateSweep {
     * batch-side class-4 recompute would land; the per-micro-batch source
     * plans are owned by StreamExecution and are pinned separately
     * (StreamingSpec), not reachable from the returned frame. */
-  lazy val violations: Seq[Violation] = {
-    attachCodegenCapture()
-    SparkEntry.queries.keys.toSeq.sorted.flatMap { g =>
-      checkGate(g, () => SparkEntry.queries(g)(session, SparkSpec.sf))
+  lazy val violations: Seq[Violation] = capturingCodegen {
+    val before = headroomCompileCount.get
+    val found = SparkEntry.queries.keys.toSeq.sorted.flatMap { g =>
+      checkGate(g, SparkEntry.queries(g)(session, _))
     }
+    println(s"[gate-pass] ${SparkEntry.queries.size} gates, " +
+      s"${found.size} violations; the sf0.1 steps compiled " +
+      s"${headroomCompileCount.get - before} classes")
+    found
   }
 
-  /** The pass's violations of `rule`, plus every gate that threw. */
+  /** The pass's violations of `rule`, plus every gate that threw at
+    * sf0.001. */
   def report(rule: Rule): Seq[String] =
     violations.collect { case Violation(r, m) if r == rule || r == Threw => m }
 }
@@ -245,22 +281,42 @@ class GateSweepSpec extends SparkSpec {
       .withColumn("rank", row_number().over(Window.orderBy(col("a"))))
       .withColumn("big",
         lit(OutputContract.TwoP53.bigDecimal).cast(DecimalType(38, 0)))
-    val red = checkGate("q_not_a_gate", () => broken)
+    val red = checkGate("q_not_a_gate", _ => broken)
     Seq(Plan -> "CartesianProduct", Plan -> "single-partition window",
-      Cells -> "big (decimal)", Scans -> "UNCLASSIFIED").foreach {
+      Cells -> "big (decimal)", Scans -> "UNCLASSIFIED",
+      Headroom -> "big (decimal)").foreach {
       case (rule, msg) =>
         assert(red.exists(v => v.rule == rule && v.msg.contains(msg)),
           s"missing $rule '$msg' in: $red")
     }
     // an empty result cannot also carry a cell, so rows > 0 gets its own
     // frame
-    val none = checkGate("q_not_a_gate", () => broken.filter(lit(false)))
+    val none = checkGate("q_not_a_gate", _ => broken.filter(lit(false)))
     assert(none.contains(Violation(Rows, "q_not_a_gate returned no rows")),
       s"got: $none")
-    // a gate that throws is reported, not an abort
+    // the sf0.1 side alone: a DECIMAL(38,0) cell of 2^53/10 (rounded up
+    // to the next integer, so it is not below the bound) is clean at
+    // sf0.001's 2^53 but breaks the 10x headroom
+    val tenth = s3.range(1).select(
+      lit((OutputContract.TwoP53 / 10).setScale(0,
+        BigDecimal.RoundingMode.CEILING).bigDecimal)
+        .cast(DecimalType(38, 0)).as("big"))
+    val atScale = checkGate("q_not_a_gate", _ => tenth)
+    assert(atScale ==
+      Seq(Violation(Headroom, "q_not_a_gate.big (decimal) = 900719925474100")),
+      s"got: $atScale")
+    // a throw at sf0.1 is a Headroom violation, not Threw
+    val thrownAtScale = checkGate("q_not_a_gate", dir =>
+      if (dir == HeadroomDir) throw new IllegalStateException("boom")
+      else tenth)
+    assert(thrownAtScale == Seq(Violation(Headroom,
+      "q_not_a_gate threw at sf0.1 IllegalStateException: boom")))
+    // a gate that throws is reported, not an abort, at each scale
     val thrown = checkGate("q_not_a_gate",
-      () => throw new IllegalStateException("boom"))
-    assert(thrown ==
-      Seq(Violation(Threw, "q_not_a_gate threw IllegalStateException: boom")))
+      _ => throw new IllegalStateException("boom"))
+    assert(thrown == Seq(
+      Violation(Threw, "q_not_a_gate threw IllegalStateException: boom"),
+      Violation(Headroom,
+        "q_not_a_gate threw at sf0.1 IllegalStateException: boom")))
   }
 }

@@ -34,6 +34,10 @@ class HttpServerSpec extends SparkSpec {
       // help root (FGU:985) and 404 on malformed ids
       assert(new String(get("/").body(), "UTF-8") == "help")
       assert(get("/en/notanumber.kmz").statusCode() == 404)
+      // an id past Long.MaxValue matches the route but is a client error
+      val tooBig = get("/en/99999999999999999999.kmz")
+      assert(tooBig.statusCode() == 400 &&
+        new String(tooBig.body(), "UTF-8") == "bad area id")
     } finally srv.stop()
   }
 
