@@ -28,7 +28,7 @@ object AtesDemo {
       java.nio.file.Paths.get(s"$outDir/area_$areaId.kml"), kml)
     Sinks.writeKmzFile(kml, s"$outDir/area_$areaId.kmz")
 
-    Sinks.writeGeoJsonLd(AtesPipeline.geoJsonLdFeatures(tables), s"$outDir/ld")
+    Sinks.writeGeoJsonLd(AtesPipeline.geoJsonFeatures(tables, None), s"$outDir/ld")
 
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/recipe.json"),

@@ -16,12 +16,18 @@ import graft.plans.BoundLong
   *    (`/root/reference/src/from-ground-up.js:302-369`)
   *  - [[kmlDocument]]/[[graft.sinks.KmzSink]] — EP1, `getKML`/`makeKMZStream`
   *    (`:635-925`, `:933-974`)
-  *  - [[geoJsonLdFeatures]] — EP3, `getGeoJSONLD`
+  *  - `geoJsonFeatures(tables, None)` — EP3, `getGeoJSONLD`
   *    (`src/mapboxing.js:171-334`; full scans, no WHERE, `:172-226`)
+  *
+  * Each of the six layers is defined once, in `layers`: its table, its
+  * folder names, its GeoJSON properties and bbox flag, and its placemark.
+  * Both formats are built from that list, and a layer's position in it is
+  * its section in both documents (the reference's query-array index,
+  * FGU:303-357).
   *
   * Execution shape: the reference runs 6 SQL queries concurrently
   * (`Promise.all`, FGU:285) then post-processes rows one at a time in JS;
-  * here each table is one declarative branch (scan → filter → project →
+  * here each layer is one declarative branch (scan → filter → project →
   * feature/placemark string column), the decision-points branch inserts the
   * warnify aggregation, and a document is the union of its branches: one
   * logical plan run by one action, filtered by `area_id = k` with `k` a
@@ -32,12 +38,62 @@ import graft.plans.BoundLong
   */
 object AtesPipeline {
 
+  /** A layer's rows as one format renders them, from the tables and the
+    * layer's scoped rows. */
+  private type Rows = (Map[String, DataFrame], DataFrame) => DataFrame
+
+  /** One ATES layer: its table, its folder names in English and French
+    * (FGU:40-57, duplicated MBX:18-35), its GeoJSON properties and whether
+    * its feature hoists a bounding box (FGU:196-199), and its placemark
+    * (fields and style). Only decision points reshape their rows, each
+    * format with its own warnify flavour. */
+  private final case class Layer(table: String, en: String, fr: String,
+      properties: Seq[Column], bbox: Boolean, placemark: Column,
+      geoJsonRows: Rows = (_, df) => df, kmlRows: Rows = (_, df) => df)
+
+  /** The six layers in query order (GeoJSON FGU:303-357, KML folders
+    * FGU:865-922). */
+  private val layers: Seq[Layer] = Seq(
+    Layer("areas_vw", "Area", "Régions",
+      Seq(col("id"), col("name")), bbox = true,
+      placemark(styleFor("areas_vw"), name = col("name"))),
+    Layer("points_of_interest", "Points of Interest", "Points d'intérêt",
+      Seq(col("id"), col("area_id"), col("name"), normType(col("type")).as("type"),
+        col("comments")), bbox = false,
+      placemark(styleFor("points_of_interest", col("type"), Styles.poiStyleByType),
+        name = col("name"), comments = col("comments"), typ = col("type"))),
+    Layer("access_roads", "Access Roads", "Routes d'accès",
+      Seq(col("id"), col("area_id"), col("description")), bbox = false,
+      placemark(styleFor("access_roads"), comments = col("description"))),
+    Layer("avalanche_paths", "Avalanche Paths", "Couloirs d'avalanche",
+      Seq(col("id"), col("area_id"), col("name")), bbox = false,
+      placemark(styleFor("avalanche_paths"), name = col("name"))),
+    // decision_points ⋈ warnings → warnify (FGU:287-289, :327-347). The
+    // warnings side is a per-point detail table: broadcast the smaller
+    // side; at 100 TB this is the one branch that shuffles (by geometry).
+    Layer("decision_points", "Decision Points", "point de décision",
+      Seq(col("id"), col("name"), col("area_id"), col("comments"), col("warnings")),
+      bbox = false,
+      placemark(styleFor("decision_points"), name = col("name"),
+        description = col("description")),
+      geoJsonRows = (tables, dp) => Warnify.geoJson(withWarnings(tables, dp),
+          geom = col("dp.geom"), typeCol = normType(col("dpw.type")),
+          warning = col("dpw.warning"), carry = Seq("id", "name", "area_id", "comments"))
+        .withColumnRenamed("geometry", "geom"),
+      kmlRows = (tables, dp) => Warnify.kml(withWarnings(tables, dp),
+          geom = col("dp.geom"), typeCol = col("dpw.type"),
+          warning = col("dpw.warning"), idCol = col("dp.id"))
+        .withColumnRenamed("geometry", "geom")),
+    Layer("zones", "Zones", "Zones",
+      Seq(col("id"), col("area_id"), col("class_code"), col("comments")), bbox = true,
+      placemark(styleFor("zones", col("class_code"), Styles.zoneStyleByClass),
+        comments = col("comments"), classCode = col("class_code").cast("string"))))
+
+  private val byTable: Map[String, Layer] = layers.map(l => l.table -> l).toMap
+
   /** Bilingual display names (FGU:40-57, duplicated MBX:18-35). */
-  def displayName(table: String, lang: String): String = {
-    val m = graft.sources.Tables.tableDisplayNames
-      .map(t => t._1 -> (if (lang == "fr") t._3 else t._2)).toMap
-    m.getOrElse(table, table)
-  }
+  def displayName(table: String, lang: String): String =
+    byTable.get(table).fold(table)(l => if (lang == "fr") l.fr else l.en)
 
   /** XML text-node escape for KML fields. */
   private def xmlEscape(c: Column): Column =
@@ -57,11 +113,9 @@ object AtesPipeline {
 
   /** decision_points ⋈ decision_points_warnings (FGU:327-347), aliased
     * `dp`/`dpw`: the input of both warnify flavours. */
-  private def decisionPointWarnings(tables: Map[String, DataFrame],
-      areaId: Option[Long]): DataFrame =
-    scoped(tables, "decision_points", areaId).alias("dp")
-      .join(tables("decision_points_warnings").alias("dpw"),
-        col("dpw.decision_point_id") === col("dp.id"), "inner")
+  private def withWarnings(tables: Map[String, DataFrame], dp: DataFrame): DataFrame =
+    dp.alias("dp").join(tables("decision_points_warnings").alias("dpw"),
+      col("dpw.decision_point_id") === col("dp.id"), "inner")
 
   /** Runs a (section, id, text) frame as one action and returns each
     * section's texts in id order (nulls first, Spark's ascending order). */
@@ -95,63 +149,16 @@ object AtesPipeline {
 
   private def normType(c: Column): Column = lower(regexp_replace(c, " ", "-"))
 
-  /** The 6-branch GeoJSON feature set (query list FGU:303-357). Pass
-    * `areaId = None` for the mapboxing full-scan variant (MBX:172-226).
-    * Returns (qidx, table, id, feature-JSON string). */
+  /** The 6-layer GeoJSON feature set. Pass `areaId = None` for the
+    * mapboxing full-scan variant (MBX:172-226). Returns (qidx, table, id,
+    * feature-JSON string), `qidx` the layer's position. */
   def geoJsonFeatures(tables: Map[String, DataFrame],
-      areaId: Option[Long]): DataFrame = {
-
-    def scoped(table: String) = AtesPipeline.scoped(tables, table, areaId)
-
-    val areas = scoped("areas_vw")
-      .select(lit(0).as("qidx"), lit("areas_vw").as("table"), col("id"),
-        featureJson("areas_vw",
-          Seq(col("id"), col("name")), withBbox = true).as("feature"))
-
-    val poi = scoped("points_of_interest")
-      .select(lit(1).as("qidx"), lit("points_of_interest").as("table"), col("id"),
-        featureJson("points_of_interest",
-          Seq(col("id"), col("area_id"), col("name"),
-            normType(col("type")).as("type"), col("comments")),
-          withBbox = false).as("feature"))
-
-    val roads = scoped("access_roads")
-      .select(lit(2).as("qidx"), lit("access_roads").as("table"), col("id"),
-        featureJson("access_roads",
-          Seq(col("id"), col("area_id"), col("description")),
-          withBbox = false).as("feature"))
-
-    val paths = scoped("avalanche_paths")
-      .select(lit(3).as("qidx"), lit("avalanche_paths").as("table"), col("id"),
-        featureJson("avalanche_paths",
-          Seq(col("id"), col("area_id"), col("name")),
-          withBbox = false).as("feature"))
-
-    // decision_points ⋈ warnings → warnify (FGU:287-289). The warnings
-    // side is a per-point detail table: broadcast the smaller side; at
-    // 100 TB this is the one branch that shuffles (by geometry).
-    val warnified = Warnify.geoJson(decisionPointWarnings(tables, areaId),
-        geom = col("dp.geom"),
-        typeCol = normType(col("dpw.type")),
-        warning = col("dpw.warning"),
-        carry = Seq("id", "name", "area_id", "comments"))
-      .withColumnRenamed("geometry", "geom")
-    val dpFeatures = warnified
-      .select(lit(4).as("qidx"), lit("decision_points").as("table"), col("id"),
-        featureJson("decision_points",
-          Seq(col("id"), col("name"), col("area_id"), col("comments"),
-            col("warnings")),
-          withBbox = false).as("feature"))
-
-    val zones = scoped("zones")
-      .select(lit(5).as("qidx"), lit("zones").as("table"), col("id"),
-        featureJson("zones",
-          Seq(col("id"), col("area_id"), col("class_code"), col("comments")),
-          withBbox = true).as("feature"))
-
-    Seq(areas, poi, roads, paths, dpFeatures, zones)
-      .reduce(_.unionByName(_))
-  }
+      areaId: Option[Long]): DataFrame =
+    layers.zipWithIndex.map { case (l, i) =>
+      l.geoJsonRows(tables, scoped(tables, l.table, areaId))
+        .select(lit(i).as("qidx"), lit(l.table).as("table"), col("id"),
+          featureJson(l.table, l.properties, l.bbox).as("feature"))
+    }.reduce(_.unionByName(_))
 
   /** EP2: the single FeatureCollection document (FGU:212-215, :291-294,
     * :362-368), features in (qidx, id) order — the engine form of the
@@ -162,25 +169,18 @@ object AtesPipeline {
     s"""{"type":"FeatureCollection","features":[${feats.mkString(",")}]}"""
   }
 
-  /** EP3 data plane: full-scan per-table feature sets for the GeoJSON-LD
-    * sink (MBX:171-334). */
-  def geoJsonLdFeatures(tables: Map[String, DataFrame]): DataFrame =
-    geoJsonFeatures(tables, None)
-
   // -------------------------------------------------------------------------
   // KML side (EP1)
   // -------------------------------------------------------------------------
 
   /** Placemark fragment column (FGU:791-861): ordered children —
     * geometry, name?, description(comments)?, description(description)?,
-    * description(type)?, ExtendedData(warnings | class_code)?, styleUrl —
-    * with the style id resolved per table/type/class_code (FGU:844-858). */
-  private def placemark(table: String, styleExpr: Column,
+    * description(type)?, ExtendedData(class_code)?, styleUrl. */
+  private def placemark(style: Column,
       name: Column = lit(null).cast("string"),
       comments: Column = lit(null).cast("string"),
       description: Column = lit(null).cast("string"),
       typ: Column = lit(null).cast("string"),
-      warnings: Column = lit(null).cast("string"),
       classCode: Column = lit(null).cast("string")): Column = {
 
     def opt(c: Column, render: Column): Column =
@@ -197,120 +197,67 @@ object AtesPipeline {
         // reference's xml() pickling does to {description} (FGU:816-818).
         concat(lit("<description>"), xmlEscape(description), lit("</description>"))),
       opt(typ, concat(lit("<description>"), xmlEscape(typ), lit("</description>"))),
-      opt(warnings,
-        concat(lit("<ExtendedData><warnings>"), xmlEscape(warnings),
-          lit("</warnings></ExtendedData>"))),
       opt(classCode,
         concat(lit("<ExtendedData><class_code>"), classCode,
           lit("</class_code></ExtendedData>"))),
-      lit("""<styleUrl>#"""), styleExpr, lit("</styleUrl>"),
+      lit("""<styleUrl>#"""), style, lit("</styleUrl>"),
       lit("</Placemark>"))
   }
 
-  /** Map a type/class column to its style id with table-default fallback —
-    * the literal-dimension lookup join of SURVEY §2.3 J4. Tables with only
-    * per-type/per-class ids get a defined catalog default (the reference's
-    * fallback would emit an unresolvable styleUrl for an unknown type). */
-  private def styleFor(table: String, typ: Option[Column],
-      classCode: Option[Column]): Column = {
-    val default = lit(Styles.tableStyle.getOrElse(table, table match {
-      case "points_of_interest" => "point_of_interest_other_styles"
-      case "zones" => "area_styles"
-      case other => other
-    }))
-    (typ, classCode) match {
-      case (Some(t), _) =>
-        val m = Styles.poiStyleByType
-        coalesce(
-          m.foldLeft(lit(null).cast("string")) { case (acc, (k, v)) =>
-            when(t === k, lit(v)).otherwise(acc) },
-          default)
-      case (_, Some(c)) =>
-        val m = Styles.zoneStyleByClass
-        coalesce(
-          m.foldLeft(lit(null).cast("string")) { case (acc, (k, v)) =>
-            when(c === k, lit(v)).otherwise(acc) },
-          default)
-      case _ => default
-    }
-  }
+  /** A layer's style id (FGU:844-858): the id `byKey` gives the row's `key`,
+    * else the table's catalog default — the literal-dimension lookup join
+    * of SURVEY §2.3 J4. */
+  private def styleFor(table: String, key: Column = lit(null),
+      byKey: Map[_, String] = Map.empty[Any, String]): Column =
+    coalesce(
+      byKey.foldLeft(lit(null).cast("string")) { case (acc, (k, v)) =>
+        when(key === k, lit(v)).otherwise(acc) },
+      lit(Styles.tableStyle(table)))
 
-  /** Per-table placemark DataFrames in folder order (KML query set
+  /** Per-layer placemark DataFrames in folder order (KML query set
     * FGU:865-922), each (id, placemark-string). */
   def kmlPlacemarks(tables: Map[String, DataFrame], areaId: Long)
-      : Seq[(String, DataFrame)] = {
-
-    def scoped(table: String) = AtesPipeline.scoped(tables, table, Some(areaId))
-
-    val areas = scoped("areas_vw").select(col("id"),
-      placemark("areas_vw", styleFor("areas_vw", None, None),
-        name = col("name")).as("pm"))
-
-    val poi = scoped("points_of_interest").select(col("id"),
-      placemark("points_of_interest",
-        styleFor("points_of_interest", Some(col("type")), None),
-        name = col("name"), comments = col("comments"),
-        typ = col("type")).as("pm"))
-
-    val roads = scoped("access_roads").select(col("id"),
-      placemark("access_roads", styleFor("access_roads", None, None),
-        comments = col("description")).as("pm"))
-
-    val paths = scoped("avalanche_paths").select(col("id"),
-      placemark("avalanche_paths", styleFor("avalanche_paths", None, None),
-        name = col("name")).as("pm"))
-
-    val warnified = Warnify.kml(decisionPointWarnings(tables, Some(areaId)),
-      geom = col("dp.geom"),
-      typeCol = col("dpw.type"),
-      warning = col("dpw.warning"),
-      idCol = col("dp.id"))
-    val dpPm = warnified
-      .withColumnRenamed("geometry", "geom")
-      .select(col("id"),
-        placemark("decision_points", styleFor("decision_points", None, None),
-          name = col("name"), description = col("description")).as("pm"))
-
-    val zones = scoped("zones").select(col("id"),
-      placemark("zones", styleFor("zones", None, Some(col("class_code"))),
-        comments = col("comments"),
-        classCode = col("class_code").cast("string")).as("pm"))
-
-    Seq(
-      "areas_vw" -> areas, "points_of_interest" -> poi,
-      "access_roads" -> roads, "avalanche_paths" -> paths,
-      "decision_points" -> dpPm, "zones" -> zones)
-  }
+      : Seq[(String, DataFrame)] =
+    layers.map(l => l.table ->
+      l.kmlRows(tables, scoped(tables, l.table, Some(areaId)))
+        .select(col("id"), l.placemark.as("pm")))
 
   /** EP1: assemble the full KML document string (newDocument/newFolder
     * FGU:579-600; doc name = areas_vw first row name, FGU:610-612). The
     * reference appends Document `<name>` after folders and styles — we emit
-    * name first (valid-KML order; content identical). The six folders and
-    * the doc name are one union, sections 0-5 and -1. */
+    * name first (valid-KML order; content identical). */
   def kmlDocument(tables: Map[String, DataFrame], areaId: Long,
       lang: String = "en", iconNumber: Int = 11,
-      iconDir: String = "files"): String = {
+      iconDir: String = "files"): String =
+    kmlDocumentAndKnown(tables, areaId, lang, iconNumber, iconDir)._1
 
-    val branches = kmlPlacemarks(tables, areaId)
+  /** [[kmlDocument]], and whether `areas_vw` has a row for the area. The
+    * six folders and the doc name are one union, sections 0-5 and -1, run
+    * as one action; an unknown area is one whose doc-name section is
+    * empty (its document has an empty name and empty folders). */
+  private[ates] def kmlDocumentAndKnown(tables: Map[String, DataFrame],
+      areaId: Long, lang: String, iconNumber: Int = 11,
+      iconDir: String = "files"): (String, Boolean) = {
+
     val docName = scoped(tables, "areas_vw", Some(areaId))
       .select(lit(-1).as("section"), col("id"), xmlEscape(col("name")))
-    val texts = sections(branches.zipWithIndex.foldLeft(docName) {
+    val texts = sections(kmlPlacemarks(tables, areaId).zipWithIndex.foldLeft(docName) {
       case (doc, ((_, df), i)) =>
         doc.union(df.select(lit(i).as("section"), col("id"), col("pm")))
     })
     def section(i: Int) = texts.getOrElse(i, Nil)
-    val name = section(-1).headOption.getOrElse("")
+    val name = section(-1).headOption
 
-    val folders = branches.zipWithIndex.map { case ((table, _), i) =>
-      val pms = section(i).mkString
-      s"<Folder><name>${displayName(table, lang)}</name>$pms</Folder>"
+    val folders = layers.zipWithIndex.map { case (l, i) =>
+      s"<Folder><name>${displayName(l.table, lang)}</name>${section(i).mkString}</Folder>"
     }.mkString
 
     val styles = Styles.all(iconDir, iconNumber).mkString
 
-    s"""<?xml version="1.0" encoding="UTF-8"?>""" +
+    (s"""<?xml version="1.0" encoding="UTF-8"?>""" +
       """<kml xmlns="http://www.opengis.net/kml/2.2"""" +
       """ xmlns:gx="http://www.google.com/kml/ext/2.2">""" +
-      s"<Document><name>$name</name>$styles$folders</Document></kml>"
+      s"<Document><name>${name.getOrElse("")}</name>$styles$folders</Document></kml>",
+      name.isDefined)
   }
 }

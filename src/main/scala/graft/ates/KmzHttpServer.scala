@@ -18,9 +18,10 @@ import graft.sinks.Sinks
   * the EP1 pipeline, and the zip streams back with the reference's
   * `attachment; filename=<areaId>.kmz` disposition (FGU:994). Input
   * validation mirrors `returnIfIn`: lang ∉ {en, fr} → 'en' (FGU:963). An
-  * id that does not fit a Long is a 400; a failure while serving is a 500
-  * whose body is a fixed message (the cause goes to stderr, not to the
-  * client).
+  * id that does not fit a Long is a 400; an area with no `areas_vw` row is
+  * a 404 (the reference reads `rows[0].name`, FGU:610-612, and has no
+  * answer for it); a failure while serving is a 500. Error bodies are
+  * fixed messages (the cause goes to stderr, not to the client).
   */
 class KmzHttpServer(spark: SparkSession, tables: Map[String, DataFrame],
     port: Int = 0) {
@@ -31,37 +32,38 @@ class KmzHttpServer(spark: SparkSession, tables: Map[String, DataFrame],
   server.createContext("/", (ex: HttpExchange) => {
     try {
       ex.getRequestURI.getPath match {
-        case "/" => respond(ex, 200, "help", "text/plain")
+        case "/" => text(ex, 200, "help")
         case Route(_, areaIdStr) if areaIdStr.toLongOption.isEmpty =>
-          respond(ex, 400, "bad area id", "text/plain")
+          text(ex, 400, "bad area id")
         case Route(langRaw, areaIdStr) =>
           val lang = if (Seq("en", "fr").contains(langRaw)) langRaw else "en"
           val areaId = areaIdStr.toLong
-          val kml = AtesPipeline.kmlDocument(tables, areaId, lang)
-          val bytes = new ByteArrayOutputStream()
-          Sinks.writeKmz(kml, bytes)
-          ex.getResponseHeaders.add("Content-Type", "application/vnd.google-earth.kmz")
-          ex.getResponseHeaders.add("Content-Disposition",
-            s"attachment; filename=$areaId.kmz")
-          val body = bytes.toByteArray
-          ex.sendResponseHeaders(200, body.length.toLong)
-          ex.getResponseBody.write(body)
-          ex.close()
-        case _ => respond(ex, 404, "not found", "text/plain")
+          val (kml, known) = AtesPipeline.kmlDocumentAndKnown(tables, areaId, lang)
+          if (!known) text(ex, 404, "unknown area")
+          else {
+            val kmz = new ByteArrayOutputStream()
+            Sinks.writeKmz(kml, kmz)
+            respond(ex, 200, kmz.toByteArray,
+              "Content-Type" -> "application/vnd.google-earth.kmz",
+              "Content-Disposition" -> s"attachment; filename=$areaId.kmz")
+          }
+        case _ => text(ex, 404, "not found")
       }
     } catch {
       case e: Throwable =>
         System.err.println(s"[kmz-http] ${ex.getRequestURI.getPath}: $e")
-        respond(ex, 500, "internal error", "text/plain")
+        text(ex, 500, "internal error")
     }
   })
 
-  private def respond(ex: HttpExchange, code: Int, body: String,
-      contentType: String): Unit = {
-    val bytes = body.getBytes("UTF-8")
-    ex.getResponseHeaders.add("Content-Type", contentType)
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
+  private def text(ex: HttpExchange, code: Int, body: String): Unit =
+    respond(ex, code, body.getBytes("UTF-8"), "Content-Type" -> "text/plain")
+
+  private def respond(ex: HttpExchange, code: Int, body: Array[Byte],
+      headers: (String, String)*): Unit = {
+    headers.foreach { case (k, v) => ex.getResponseHeaders.add(k, v) }
+    ex.sendResponseHeaders(code, body.length.toLong)
+    ex.getResponseBody.write(body)
     ex.close()
   }
 

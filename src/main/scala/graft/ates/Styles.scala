@@ -35,11 +35,16 @@ object Styles {
     "Destination" -> "point_of_interest_destination_styles",
     "Lake" -> "point_of_interest_lake_styles",
     "Mountain" -> "point_of_interest_mountain_styles")
+  /** Each table's default style id. Tables styled per type or per class
+    * get a defined catalog default too: the reference's fallback would emit
+    * an unresolvable styleUrl for an unknown type. */
   val tableStyle: Map[String, String] = Map(
     "areas_vw" -> "area_styles",
+    "points_of_interest" -> "point_of_interest_other_styles",
     "access_roads" -> "access_road_styles",
     "avalanche_paths" -> "avalanche_path_styles",
-    "decision_points" -> "decision_point_styles")
+    "decision_points" -> "decision_point_styles",
+    "zones" -> "area_styles")
 
   /** Icon href template (FGU:673-678). */
   def iconHref(iconDir: String, iconNumber: Int, icon: String): String =

@@ -83,30 +83,37 @@ object GeoFunctions {
       .otherwise(lit(null).cast("string"))
   }
 
-  /** Envelope/bbox of any geometry — the engine's `ST_Envelope`
-    * (`src/from-ground-up.js:87`): min/max over all vertices via
-    * higher-order functions, no shuffle, pure per-row compute. */
-  def st_envelope(g: Column): Column = {
-    val pts = st_points(g)
-    val xs = transform(pts, p => element_at(p, 1))
-    val ys = transform(pts, p => element_at(p, 2))
-    struct(
-      array_min(xs).as("xmin"), array_min(ys).as("ymin"),
-      array_max(xs).as("xmax"), array_max(ys).as("ymax"))
+  /** The one envelope pass: a single `aggregate` over `st_points(g)` keeps
+    * a running (xmin, ymin, xmax, ymax) struct, null-initialised, with
+    * `least`/`greatest` as the merge (both skip nulls and keep the first of
+    * equal values, as `array_min`/`array_max` do), and `finish` renders the
+    * caller's result from the final struct. Every envelope the engine
+    * computes reads the vertices this once per row. */
+  private[graft] def envelopeWith(g: Column)(finish: Column => Column): Column = {
+    val empty = struct(envelopeType.map(f => lit(null).cast(DoubleType).as(f.name)): _*)
+    aggregate(st_points(g), empty, (e, p) => struct(
+        least(e.getField("xmin"), element_at(p, 1)).as("xmin"),
+        least(e.getField("ymin"), element_at(p, 2)).as("ymin"),
+        greatest(e.getField("xmax"), element_at(p, 1)).as("xmax"),
+        greatest(e.getField("ymax"), element_at(p, 2)).as("ymax")),
+      finish)
   }
 
+  /** Envelope/bbox of any geometry — the engine's `ST_Envelope`
+    * (`src/from-ground-up.js:87`): the [[envelopeWith]] fold, pure per-row
+    * compute, no shuffle. An empty vertex list gives four null fields; a
+    * null geometry gives a null envelope. */
+  def st_envelope(g: Column): Column = envelopeWith(g)(identity)
+
   /** Envelope rendered as a closed GeoJSON Polygon ring (PostGIS-style
-    * ST_Envelope output geometry). */
+    * ST_Envelope output geometry): the same fold, the ring rendered from
+    * its final struct. */
   def st_envelope_polygon(g: Column): Column = {
-    val e = st_envelope(g)
-    def p(x: Column, y: Column) = array(x, y)
-    val ring = array(
-      p(e.getField("xmin"), e.getField("ymin")),
-      p(e.getField("xmax"), e.getField("ymin")),
-      p(e.getField("xmax"), e.getField("ymax")),
-      p(e.getField("xmin"), e.getField("ymax")),
-      p(e.getField("xmin"), e.getField("ymin")))
-    struct(lit("Polygon").as("kind"), array(array(ring)).as("coordinates"))
+    def p(e: Column, x: String, y: String) = array(e.getField(x), e.getField(y))
+    val rings = envelopeWith(g)(e => array(array(array(
+      p(e, "xmin", "ymin"), p(e, "xmax", "ymin"), p(e, "xmax", "ymax"),
+      p(e, "xmin", "ymax"), p(e, "xmin", "ymin")))))
+    struct(lit("Polygon").as("kind"), rings.as("coordinates"))
   }
 
   // -- KML rendering (the reference's Geometry ctor, FGU:386-447) -------------

@@ -124,8 +124,8 @@ object TextFunctions {
     * partial-overlap detector (copied paragraphs) that whole-document
     * [[fingerprint]] and near-global MinHash both miss. Narrow, no
     * shuffle; served by the native one-pass kernel
-    * ([[graft.plans.WinnowFingerprintExpr]], ≡ [[winnowFingerprintComposed]]
-    * in TextKernelsSpec). */
+    * ([[graft.plans.WinnowFingerprintExpr]], ≡ [[hashedCharShinglesOfNormalized]]
+    * then [[winnowFromHashes]] in TextKernelsSpec). */
   def winnowFingerprint(c: Column, k: Int = 5, w: Int = 4): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.plans.WinnowFingerprintExpr(

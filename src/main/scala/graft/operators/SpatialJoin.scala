@@ -244,14 +244,13 @@ object SpatialJoin {
     * geometry carried for refinement. */
   def polygonCells(polygons: DataFrame, polyGeom: Column, polyId: Column,
       cellSize: Double): DataFrame = {
-    val e = st_envelope(polyGeom)
-    val cellsOfEnvelope = flatten(transform(
+    val cellsOfEnvelope = envelopeWith(polyGeom)(e => flatten(transform(
       sequence(floor(e.getField("xmin") / cellSize),
         floor(e.getField("xmax") / cellSize)),
       cx => transform(
         sequence(floor(e.getField("ymin") / cellSize),
           floor(e.getField("ymax") / cellSize)),
-        cy => cellId(cx, cy))))
+        cy => cellId(cx, cy)))))
     polygons.select(
       polyId.as("polygon_id"), polyGeom.as("__geom"),
       explode(cellsOfEnvelope).as("__cell"))

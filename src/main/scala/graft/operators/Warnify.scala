@@ -31,6 +31,16 @@ import org.apache.spark.sql.functions._
   */
 object Warnify {
 
+  /** The grouping both flavours share: one row per distinct geometry, with
+    * bucket `i`'s warnings as the sorted list `__b<i>` beside `extra`. */
+  private def grouped(df: DataFrame, geom: Column, typeCol: Column,
+      warning: Column, buckets: Seq[String], extra: Seq[Column]): DataFrame = {
+    val aggs = buckets.zipWithIndex.map { case (b, i) =>
+      sort_array(collect_list(when(typeCol === b, warning))).as(s"__b$i")
+    } ++ extra
+    df.groupBy(geom.as("geometry")).agg(aggs.head, aggs.tail: _*)
+  }
+
   /** GeoJSON flavor. Emits one row per distinct geometry value with
     * `warnings` = `{"managing-risk":[...],"concern":[...]}` (JSON string,
     * key order matching the reference's accumulator init FGU:238-243) plus
@@ -42,17 +52,11 @@ object Warnify {
       warning: Column,
       carry: Seq[String],
       buckets: Seq[String] = Seq("managing-risk", "concern")): DataFrame = {
-
-    val bucketAggs = buckets.map { b =>
-      sort_array(collect_list(when(typeCol === b, warning))).as(s"__b_$b")
-    }
-    val carryAggs = carry.map(c => max(col(c)).as(c))
-    val mapEntries = buckets.flatMap(b => Seq(lit(b), col(s"__b_$b")))
-
-    df.groupBy(geom.as("geometry"))
-      .agg(bucketAggs.head, (bucketAggs.tail ++ carryAggs): _*)
-      .withColumn("warnings", to_json(map(mapEntries: _*)))
-      .drop(buckets.map(b => s"__b_$b"): _*)
+    val lists = buckets.indices.map(i => s"__b$i")
+    grouped(df, geom, typeCol, warning, buckets, carry.map(c => max(col(c)).as(c)))
+      .withColumn("warnings", to_json(map(
+        buckets.zip(lists).flatMap { case (b, l) => Seq(lit(b), col(l)) }: _*)))
+      .drop(lists: _*)
   }
 
   /** KML flavor: same grouping, but renders the HTML warnings-table
@@ -64,13 +68,9 @@ object Warnify {
       geom: Column,
       typeCol: Column,
       warning: Column,
-      idCol: Column): DataFrame = {
-
-    val concerns = sort_array(collect_list(when(typeCol === "Concern", warning)))
-    val risks = sort_array(collect_list(when(typeCol === "Managing risk", warning)))
-
-    df.groupBy(geom.as("geometry"))
-      .agg(min(idCol).as("id"), concerns.as("__concern"), risks.as("__risk"))
+      idCol: Column): DataFrame =
+    grouped(df, geom, typeCol, warning, Seq("Concern", "Managing risk"),
+        Seq(min(idCol).as("id")))
       .select(
         col("geometry"),
         // stable content id (min source id per geometry) so downstream
@@ -78,10 +78,10 @@ object Warnify {
         // monotonically_increasing_id() would vary with partitioning
         col("id"),
         lit("Decision Point").as("name"),
-        warningsPopup(warningsTable(col("__concern"), col("__risk")))
+        // the popup CSS wrapper (FGU:522-524) around the warnings table
+        concat(lit(PopupHeader), warningsTable(col("__b0"), col("__b1")))
           .as("description"),
         lit("decision_points").as("table"))
-  }
 
   /** One checklist row per warning; unescapes `\'` like the reference's
     * toChecklist (FGU:508-515). */
@@ -105,10 +105,6 @@ object Warnify {
       lit("""</tr><tr><tr><th>Managing risk</th></tr>"""),
       checklist(riskList, "green-check"),
       lit("""<tr></tbody></table>"""))
-
-  /** The popup CSS wrapper (FGU:522-524). */
-  private def warningsPopup(table: Column): Column =
-    concat(lit(PopupHeader), table)
 
   /** Verbatim popup header from FGU:522-524 (output format, not logic). */
   val PopupHeader: String =

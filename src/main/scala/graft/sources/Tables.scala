@@ -238,15 +238,4 @@ object Tables {
       StructField("comments", StringType),
       StructField("geom", geometryType)))
   )
-
-  /** Bilingual presentation-name dimension, the engine form of the name maps
-    * duplicated at /root/reference/src/from-ground-up.js:40-57 and
-    * src/mapboxing.js:18-35. Tiny: always broadcast when joined. */
-  val tableDisplayNames: Seq[(String, String, String)] = Seq(
-    ("areas_vw", "Area", "Régions"),
-    ("points_of_interest", "Points of Interest", "Points d'intérêt"),
-    ("access_roads", "Access Roads", "Routes d'accès"),
-    ("avalanche_paths", "Avalanche Paths", "Couloirs d'avalanche"),
-    ("decision_points", "Decision Points", "point de décision"),
-    ("zones", "Zones", "Zones"))
 }

@@ -191,7 +191,7 @@ class AtesPipelineSpec extends SparkSpec {
 
   test("EP3: GeoJSON-LD sink writes one JSON-lines dir per table (MBX:312-333)") {
     val out = Files.createTempDirectory("graft_ld").toFile
-    Sinks.writeGeoJsonLd(AtesPipeline.geoJsonLdFeatures(tables),
+    Sinks.writeGeoJsonLd(AtesPipeline.geoJsonFeatures(tables, None),
       out.getAbsolutePath)
     val dirs = out.listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(dirs == Set("areas_vw", "points_of_interest", "access_roads",

@@ -38,6 +38,10 @@ class HttpServerSpec extends SparkSpec {
       val tooBig = get("/en/99999999999999999999.kmz")
       assert(tooBig.statusCode() == 400 &&
         new String(tooBig.body(), "UTF-8") == "bad area id")
+      // an area with no areas_vw row is unknown, not an empty document
+      val unknown = get("/en/999.kmz")
+      assert(unknown.statusCode() == 404 &&
+        new String(unknown.body(), "UTF-8") == "unknown area")
     } finally srv.stop()
   }
 

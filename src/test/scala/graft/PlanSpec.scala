@@ -162,6 +162,19 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("UDF"), "feature pipeline must stay UDF-free (codegen)")
   }
 
+  test("ATES bbox: the envelope reads st_points once per row") {
+    import org.apache.spark.sql.catalyst.expressions.Flatten
+    import org.apache.spark.sql.functions.col
+    import graft.functions.GeoFunctions.{st_asgeojson, st_envelope_polygon}
+    val bbox = graft.ates.Fixtures.tables(spark)("areas_vw")
+      .select(st_asgeojson(st_envelope_polygon(col("geom"))))
+    // st_points(g) is flatten(flatten(g.coordinates))
+    val pointReads = bbox.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .map(_.collect { case Flatten(_: Flatten) => 1 }.size).sum
+    assert(pointReads == 1,
+      s"st_points evaluated $pointReads times:\n${bbox.queryExecution.optimizedPlan}")
+  }
+
   test("q_sim_topk: bounded-buffer aggregator prunes map-side, no full-window sort") {
     val p = plan("q_sim_topk")
     assert(p.contains("ObjectHashAggregate"),

@@ -257,10 +257,11 @@ class PropertySpec extends SparkSpec {
     val coords = Gen.listOfN(6,
       Gen.chooseNum(-179.0, 179.0).flatMap(x =>
         Gen.chooseNum(-89.0, 89.0).map(y => (x, y))))
-    val lines = samples(coords, 25).map { pts =>
-      s"""{"type":"LineString","coordinates":[${
-        pts.map(p => s"[${p._1},${p._2}]").mkString(",")}]}"""
-    }
+    def line(pts: Seq[String]) =
+      s"""{"type":"LineString","coordinates":[${pts.mkString(",")}]}"""
+    val lines = samples(coords, 25).map(pts => line(pts.map(p => s"[${p._1},${p._2}]"))) ++
+      Seq(line(Nil), line(Seq.fill(3)("[1.5,-2.5]")),
+        line(Seq("[-0.0,0.0]", "[0.0,-0.0]", "[0.0,0.0]", "[-0.0,-0.0]")))
     import graft.functions.GeoFunctions._
     val df = lines.toDF("gj")
       .select(st_geomfromgeojson(col("gj")).as("g"))
@@ -270,5 +271,18 @@ class PropertySpec extends SparkSpec {
         element_at(p, 1) < col("e.xmin") || element_at(p, 1) > col("e.xmax") ||
           element_at(p, 2) < col("e.ymin") || element_at(p, 2) > col("e.ymax")))
     assert(violated.count() == 0)
+    // each corner is exactly (sign of zero included; null for no vertices)
+    // the composed array_min/array_max of the vertex coordinates
+    val xs = transform(col("pts"), p => element_at(p, 1))
+    val ys = transform(col("pts"), p => element_at(p, 2))
+    val corners = Seq("xmin" -> array_min(xs), "ymin" -> array_min(ys),
+      "xmax" -> array_max(xs), "ymax" -> array_max(ys))
+    df.select(corners.flatMap { case (f, ref) => Seq(col(s"e.$f"), ref) }: _*)
+      .collect().zip(lines).foreach { case (r, gj) =>
+        corners.indices.foreach { i =>
+          assert(java.util.Objects.equals(r.get(2 * i), r.get(2 * i + 1)),
+            s"${corners(i)._1} of $gj: ${r.get(2 * i)} vs ${r.get(2 * i + 1)}")
+        }
+      }
   }
 }
