@@ -36,7 +36,7 @@ object AtesDemo {
 
     println(s"[ates-demo] wrote outputs to $outDir:")
     new java.io.File(outDir).listFiles().sortBy(_.getName).foreach { f =>
-      println(f"  ${f.getName}%-24s ${if (f.isDirectory) "dir" else f.length + " bytes"}")
+      println(f"  ${f.getName}%-24s ${if (f.isDirectory) "dir" else s"${f.length} bytes"}")
     }
     spark.stop()
   }

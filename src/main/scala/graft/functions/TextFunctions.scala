@@ -71,11 +71,6 @@ object TextFunctions {
       sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
       i => n.substr(i, lit(k)))
 
-  /** Character k-shingles of the normalized text (inline convenience —
-    * see [[charShinglesOfNormalized]] for the staging caveat). */
-  def charShingles(c: Column, k: Int): Column =
-    charShinglesOfNormalized(normalizeText(c), k)
-
   /** Word n-grams over the token array. slice+array_join measured 3× faster
     * than per-element element_at+concat_ws at sf0.1 (slice copies only n
     * elements; the per-access lambda/bounds machinery dominates the
@@ -124,24 +119,21 @@ object TextFunctions {
     * partial-overlap detector (copied paragraphs) that whole-document
     * [[fingerprint]] and near-global MinHash both miss. Narrow, no
     * shuffle; served by the native one-pass kernel
-    * ([[graft.plans.WinnowFingerprintExpr]], ≡ [[hashedCharShinglesOfNormalized]]
-    * then [[winnowFromHashes]] in TextKernelsSpec). */
+    * ([[graft.plans.WinnowFingerprintExpr]], ≡ TextKernelsSpec's composed
+    * `hashedCharShinglesOfNormalized` then [[winnowFromHashes]]). */
   def winnowFingerprint(c: Column, k: Int = 5, w: Int = 4): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.plans.WinnowFingerprintExpr(
       ColumnBridge.expression(c), k, w))
   }
 
-  /** The built-ins-only pieces of [[winnowFingerprint]] — the executable
-    * spec of the native kernel and the source of the oracle SQL shape.
-    * Two stages on purpose: the hash array MUST materialize in its own
-    * projection before [[winnowFromHashes]] — inlined, every window's
-    * lambda would recompute the whole shingle-hash pipeline (O(n²) md5s
-    * per document; the round-1 staging lesson). */
-  def hashedCharShinglesOfNormalized(n: Column, k: Int): Column =
-    transform(charShinglesOfNormalized(n, k), sh => hash32Composed(sh))
-
-  /** Window-min winnowing over a PRE-STAGED hash array column. */
+  /** Window-min winnowing over a PRE-STAGED hash array column: with
+    * TextKernelsSpec's `hashedCharShinglesOfNormalized`, the built-ins-only
+    * form of [[winnowFingerprint]] — the executable spec of the native
+    * kernel and the source of the oracle SQL shape. Two stages on purpose:
+    * the hash array MUST materialize in its own projection first — inlined,
+    * every window's lambda would recompute the whole shingle-hash pipeline
+    * (O(n²) md5s per document; the round-1 staging lesson). */
   def winnowFromHashes(hs: Column, w: Int): Column =
     array_sort(array_distinct(transform(
       sequence(lit(1), greatest(size(hs) - (w - 1), lit(1))),
@@ -216,9 +208,6 @@ object TextFunctions {
     }
     array(cols: _*)
   }
-
-  def minhashSignature(shingles: Column, k: Int): Column =
-    minhashFromHashes(hashedShingles(shingles), k)
 
   // -- native one-pass kernels (plans/TextKernels) ---------------------------
   // Byte-identical to the composed forms above (TextKernelsSpec asserts it on

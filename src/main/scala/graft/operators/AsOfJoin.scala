@@ -51,7 +51,7 @@ object AsOfJoin {
     // silently null out string keys and reintroduce nondeterminism
     val tieBreakType = right.select(rightTieBreak).schema.head.dataType
 
-    val leftCols = left.columns
+    val leftCols = left.columns.toSeq
     val rTagged = right.select(
       rightKey.as("_k"), rightTime.as("_t"), lit(0).as("_side"),
       rightTieBreak.as("_tb"), payload.as("_payload"))
@@ -62,7 +62,7 @@ object AsOfJoin {
         leftCols.map(left(_))): _*)
 
     val unioned = rTagged
-      .select((rTagged.columns.map(col) ++
+      .select((rTagged.columns.toSeq.map(col) ++
         leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
       .unionByName(lTagged)
 

@@ -19,10 +19,16 @@ import graft.functions.TextFunctions.wordNgramsNative
   * corpus's TBs), so the eval n-gram set is a broadcast dimension — the
   * corpus side stays a narrow scan → one-pass native shingler
   * ([[graft.plans.WordNgramsExpr]], codegen'd) → explode → broadcast-hash
-  * semi-probe, with NO corpus-wide shuffle of text or grams. The only
-  * exchange carries (doc_id, partial count) pairs for the final per-doc
-  * sum — partial-aggregated map-side, a few bytes per doc. At 100 TB the
-  * corpus scan is the whole cost, which is the floor for any overlap check.
+  * semi-probe, with NO corpus-wide shuffle of grams. The only exchange
+  * carries (doc_id, partial count) pairs for the final per-doc sum —
+  * partial-aggregated map-side, a few bytes per doc. At 100 TB the corpus
+  * scan is the whole cost, which is the floor for any overlap check, and
+  * the corpus arrives with more partitions than cores, so nothing else is
+  * added. A corpus with fewer partitions than cores (a one-split file) is
+  * first [[Spread]]: one round-robin of its rows into a lazy local
+  * checkpoint, which the shingler runs over on every core and which
+  * [[scrub]]'s overlap and left-anti both read, so the input is computed
+  * once.
   */
 object Contamination {
 
@@ -42,7 +48,7 @@ object Contamination {
     val evalGrams = evalDocs
       .select(explode(array_distinct(wordNgramsNative(textCol, n))).as("gram"))
       .distinct()
-    corpus
+    Spread(corpus)
       .select(idCol.as("id"),
         explode(array_distinct(wordNgramsNative(textCol, n))).as("gram"))
       // inner join ≡ semi-join here (evalGrams is distinct), but keeps the
@@ -85,7 +91,7 @@ object Contamination {
     val mightContain = ColumnBridge.column(
       graft.plans.BloomMightContainExpr(
         ColumnBridge.expression(col("gram")), bloom))
-    corpus
+    Spread(corpus)
       .select(idCol.as("id"),
         explode(array_distinct(wordNgramsNative(textCol, n))).as("gram"))
       .filter(mightContain)
@@ -97,12 +103,15 @@ object Contamination {
 
   /** Decontaminate: `corpus` minus every doc contaminated at
     * (`n`, `minOverlap`) — the apply step, an anti-join against the
-    * flagged ids (ids only shuffle, text never does). */
+    * flagged ids (ids only shuffle, text never does). The corpus is
+    * [[Spread]] once and that one frame feeds both the overlap and the
+    * anti-join, so a narrow input is read once, not once per side. */
   def scrub(corpus: DataFrame, evalDocs: DataFrame,
       textCol: Column, idCol: Column, n: Int = 5,
       minOverlap: Long = 1L): DataFrame = {
-    val flagged = ngramOverlap(corpus, evalDocs, textCol, idCol, n, minOverlap)
+    val spread = Spread(corpus)
+    val flagged = ngramOverlap(spread, evalDocs, textCol, idCol, n, minOverlap)
       .select(col("id"))
-    corpus.join(flagged, idCol === flagged("id"), "left_anti")
+    spread.join(flagged, idCol === flagged("id"), "left_anti")
   }
 }

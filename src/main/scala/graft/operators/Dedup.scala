@@ -32,22 +32,26 @@ object Dedup {
 
   /** Per-document MinHash signature table: (id, sig ARRAY<BIGINT>[k]) via
     * the native one-pass kernel (plans/MinhashSigExpr — codegen'd, no
-    * intermediate arrays; ≡ the staged composed form, TextKernelsSpec). */
+    * intermediate arrays; ≡ the staged composed form, TextKernelsSpec),
+    * over the [[Spread]] input, so a one-split corpus still signs on
+    * every core. */
   def minhashSignatures(df: DataFrame, textCol: Column, idCol: Column,
       shingleSize: Int = 3, k: Int = 16): DataFrame =
-    df.select(idCol.as("id"),
+    Spread(df).select(idCol.as("id"),
       minhashSigNative(textCol, shingleSize, k).as("sig"))
 
   /** LSH banding → candidate pairs (id_a < id_b) whose estimated Jaccard
     * (signature agreement rate) ≥ `threshold`.
     *
-    * Plan shape: signatures (narrow, one md5 per shingle) → explode k/bands
-    * band-keys per doc → ONE shuffle on band-key (the window sort; the
-    * following group-by reuses its hash partitioning, no second exchange) →
-    * per-bucket pair expansion → (id_a, id_b) dedup (map-side partial; the
-    * second, far smaller shuffle — candidate pairs only, never the banded
-    * corpus) → agreement threshold. At 100 TB the band-key shuffle carries
-    * (16-byte key, id, k longs) per doc — never text.
+    * Plan shape: signatures (narrow, one md5 per shingle, over the
+    * [[Spread]] input: a one-split corpus is round-robined once into a
+    * local checkpoint first, a wide one is signed where it lies) → explode
+    * k/bands band-keys per doc → ONE shuffle on band-key (the window sort;
+    * the following group-by reuses its hash partitioning, no second
+    * exchange) → per-bucket pair expansion → (id_a, id_b) dedup (map-side
+    * partial; the second, far smaller shuffle — candidate pairs only, never
+    * the banded corpus) → agreement threshold. At 100 TB the band-key
+    * shuffle carries (16-byte key, id, k longs) per doc — never text.
     *
     * Skew safety — real web corpora concentrate boilerplate into a few
     * degenerate buckets, so every per-bucket quantity is bounded:
@@ -405,8 +409,8 @@ object Dedup {
     * Semi-eager: the shingle-set frame is `localCheckpoint`ed — it feeds
     * THREE consumers (the prefix explode and both sides of the verify
     * join), so without the checkpoint the n-gram pass re-runs for each;
-    * the preceding repartition spreads that single pass across the
-    * cluster even when the input is one parquet split. (On the gate
+    * the input is [[Spread]] first, so that single pass runs on every core
+    * even when the input is one parquet split. (On the gate
     * corpus this is cost-neutral — its ~50-word vocabulary makes the
     * candidate join, not the n-gram pass, the dominant cost: shared
     * shingles have high df everywhere, the near-worst case for prefix
@@ -417,7 +421,6 @@ object Dedup {
       n: Int = 3, tauMilli: Int = 500): DataFrame = {
     require(tauMilli > 0 && tauMilli <= 1000,
       s"tauMilli must be in (0, 1000], got $tauMilli")
-    val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     // Round 11: every shingle is DICTIONARY-ENCODED to an injective long
     // id at the df-census join (monotonically_increasing_id over the
     // vocab — an id table, not a hash, so encoded-set intersection counts
@@ -428,8 +431,7 @@ object Dedup {
     // per-row UTF8String hash-set build, which was the suite's single
     // largest span on this boilerplate-heavy corpus (~300k candidates →
     // 256 true pairs at sf0.1).
-    val ex = docs.select(idCol.as("id"), textCol.as("__t"))
-      .repartition(parts)
+    val ex = Spread(docs.select(idCol.as("id"), textCol.as("__t")))
       .select(col("id"),
         explode(array_distinct(wordNgramsNative(col("__t"), n))).as("g"))
     val vocab = ex.groupBy(col("g"))

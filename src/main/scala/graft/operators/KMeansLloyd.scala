@@ -59,7 +59,7 @@ object KMeansLloyd {
     val dim = cents.head.length
 
     def assigned(): DataFrame = {
-      val dists = array(cents.map(cv =>
+      val dists = array(cents.toSeq.map(cv =>
         aggregate(zip_with(col("vq"), lit(cv), (x, c) => (x - c) * (x - c)),
           lit(0L), (acc, x) => acc + x)): _*)
       q.withColumn("__d", dists)

@@ -203,8 +203,8 @@ object TextKernels {
     new GenericArrayData(mins)
   }
 
-  /** ≡ the composed winnowing form (`TextFunctions.hashedCharShinglesOfNormalized`
-    * then `TextFunctions.winnowFromHashes`, as TextKernelsSpec compares):
+  /** ≡ the composed winnowing form (TextKernelsSpec's
+    * `hashedCharShinglesOfNormalized` then `TextFunctions.winnowFromHashes`):
     * hash32 of every char k-shingle of the normalized text, minimum hash
     * per w-wide window, distinct selected hashes sorted ascending — one
     * pass, no shingle/hash arrays materialized beyond the O(n) hash
@@ -322,7 +322,8 @@ case class MinhashSigExpr(child: Expression, n: Int, k: Int)
 
 /** Native winnowing fingerprint (array<long>, sorted distinct); ≡
   * `TextFunctions.winnowFromHashes(hashedCharShinglesOfNormalized(n, k), w)`
-  * over the normalized text `n`. */
+  * over the normalized text `n` (the shingle hashing is TextKernelsSpec's
+  * composed oracle). */
 case class WinnowFingerprintExpr(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

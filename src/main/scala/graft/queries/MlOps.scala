@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.TextFunctions.{hash32, normalizeText, sqlHash32,
   sqlMinhashSignature, sqlBandedCandidates, sqlTokens, tokens}
-import graft.operators.{Components, Dedup}
+import graft.operators.{Components, Dedup, Spread}
 import graft.sources.Tables
 
 /** ML-pipeline guardrail operators (SURVEY §2.11 extensions): the
@@ -652,12 +652,9 @@ object MlOps extends QueryPack {
     * row-sized, not gram-sized). */
   private def ngramNovelty(s: SparkSession, dir: String) = {
     // spread BEFORE the gram fan-out: the per-gram md5 work is ~300× the
-    // scan, and a few-MB documents file is ONE split — without the
-    // repartition the whole explode runs in a single task (the
-    // Bootstrap.poissonMeanCi lesson)
-    val parts = s.sessionState.conf.numShufflePartitions
-    val g = docs(s, dir).select(col("doc_id"), col("text"))
-      .repartition(parts)
+    // scan, and a few-MB documents file is ONE split — unspread, the whole
+    // explode runs in a single task (the Bootstrap.poissonMeanCi lesson)
+    val g = Spread(docs(s, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         explode(array_distinct(
           graft.functions.TextFunctions.wordNgrams(col("text"), 3)))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
-import graft.operators.{Chunking, Contamination, Dedup, Layout, Sampling}
+import graft.operators.{Chunking, Contamination, Dedup, Layout, Sampling, Spread}
 import graft.sources.Tables
 
 /** Corpus-pipeline operators round 2 (SURVEY §2.11 extensions): benchmark
@@ -33,15 +33,14 @@ object PipelineOps extends QueryPack {
     * ([[MlOps q_calibration_bins]]), so the model has exactly ONE
     * definition. Input must carry (doc_id, text) plus any passthrough
     * columns, which survive into the per-doc output alongside
-    * (n_tokens, score_milli). The narrow base is repartitioned before
-    * the token fan-out — the hash work is many× the scan and a few-MB
-    * corpus file is one split. */
+    * (n_tokens, score_milli). The base is [[Spread]] before the token
+    * fan-out: the hash work is many× the scan, and a few-MB corpus file
+    * is one split. */
   def toyModelScores(d: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val parts = d.sparkSession.sessionState.conf.numShufflePartitions
-    val passthrough = d.columns.filterNot(c => c == "doc_id" || c == "text")
+    val passthrough = d.columns.toSeq.filterNot(c => c == "doc_id" || c == "text")
     val keyCols = col("doc_id") +: passthrough.map(col)
-    d.repartition(parts)
+    Spread(d)
       .select(keyCols :+
         explode(tokens(normalizeText(col("text")))).as("token"): _*)
       .groupBy(keyCols :+ col("token"): _*)
@@ -445,14 +444,15 @@ object PipelineOps extends QueryPack {
       val corpus = d0.unionByName(d0.select(
         (col("doc_id") + Parity.VariantOffset).as("doc_id"),
         concat(col("text"), lit(" zzmutant")).as("text"), col("lang")))
-      // round 18: stage leaves — each downstream stage (scrub, LSH
-      // pairs, anti-join) re-ran the whole upstream composition per
-      // consumer (ScanCount: documents 24x at sf0.01); one lazy
-      // checkpoint per stage output caps the pipeline at one
-      // materialization per stage
+      // one materialization per stage: scrub spreads the sample into
+      // its own checkpoint (operators.Spread), and `decon` is a lazy
+      // checkpoint because it feeds two consumers (LSH pairs and the
+      // anti-join). Without it the eval-slice scan of scrub's overlap
+      // sits in this plan (1 documents scan instead of 0; before round
+      // 18's stage leaves, documents was read 24x at sf0.01)
       val sampled = Sampling.stratifiedHashSample(
         corpus, col("doc_id"), col("lang"), Map("en" -> 0.5, "zh" -> 0.9),
-        defaultRate = 0.25).localCheckpoint(eager = false)
+        defaultRate = 0.25)
       val evalDocs = docs(s, dir).filter(evalPred)
       val decon = Contamination.scrub(sampled, evalDocs,
         col("text"), col("doc_id"), n = 5, minOverlap = 1L)

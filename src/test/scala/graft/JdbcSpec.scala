@@ -51,7 +51,7 @@ class JdbcSpec extends SparkSpec {
     // 4 parallel range reads, all 100 rows exactly once across ranges
     assert(df.rdd.getNumPartitions == 4)
     assert(df.count() == 100)
-    assert(df.agg(sum(col("ID"))).head.getLong(0) == (0 until 100).sum)
+    assert(df.agg(sum(col("ID"))).head().getLong(0) == (0 until 100).sum)
   }
 
   test("filters and projections push down into the generated remote SQL") {
@@ -74,7 +74,7 @@ class JdbcSpec extends SparkSpec {
   test("a pushed-down aggregate-free scan round-trips every column type") {
     val df = Tables.readJdbc(spark, url, "bands")
     val row = df.filter(col("ID") === 7)
-      .select(col("NAME"), col("LO"), col("HI")).head
+      .select(col("NAME"), col("LO"), col("HI")).head()
     assert(row.getString(0) == "band_7")
     assert(row.getDouble(1) == 70.0 && row.getDouble(2) == 79.0)
   }

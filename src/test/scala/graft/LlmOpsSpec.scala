@@ -10,6 +10,13 @@ class LlmOpsSpec extends SparkSpec {
   private lazy val docs = Tables.load(spark, sf, "documents")
   private lazy val emb = Tables.load(spark, sf, "embeddings")
 
+  /** Character k-shingles of the normalized text (inline: normalize runs
+    * once per shingle, fine for a few short strings). */
+  private def charShingles(c: org.apache.spark.sql.Column,
+      k: Int): org.apache.spark.sql.Column =
+    graft.functions.TextFunctions.charShinglesOfNormalized(
+      graft.functions.TextFunctions.normalizeText(c), k)
+
   test("q_minhash_calibration: exact cells replay against a scalar " +
       "per-pair Jaccard recompute; errors bounded and mutants calibrated") {
     val rows = SparkEntry.queries("q_minhash_calibration")(spark, sf)
@@ -373,7 +380,7 @@ class LlmOpsSpec extends SparkSpec {
     val df = Seq("abc123def", "hello world42", "x").toDF("t")
     val rows = df.select(
       graft.functions.TextFunctions.subwordTokens(col("t")).as("sw"),
-      graft.functions.TextFunctions.charShingles(col("t"), 3).as("sh"))
+      charShingles(col("t"), 3).as("sh"))
       .collect()
     // "abc123def" → abc|123|def (digit/letter boundaries)
     assert(rows(0).getSeq[String](0) == Seq("abc", "123", "def"))

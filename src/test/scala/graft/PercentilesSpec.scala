@@ -100,7 +100,7 @@ class PercentilesSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val eager = Percentiles.exactInterpolatedEager(li, col("l_returnflag"),
       col("l_extendedprice"), ps, names)
-    val newIds = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val newIds = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     // only the (one row per group) RESULT checkpoint may remain pinned —
     // the (group, value) input copy must be unpersisted before return
     val resultId = eager.queryExecution.analyzed

@@ -1,8 +1,21 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.functions.TextFunctions._
-import graft.operators.{Chunking, Contamination, Dedup, Layout}
+import graft.operators.{Chunking, Contamination, Dedup, Layout, Packing, Sampling, Spread}
 
 /** Operator-level behavior of the round-5 pipeline additions; the gate
   * queries in [[graft.queries.PipelineOps]] pin the same ops against
@@ -69,6 +82,166 @@ class PipelineOpsSpec extends SparkSpec {
     // absent keys mostly miss (1% fpp; 500 probes → a handful at most)
     val fps = (10000 until 10500).count(i => got(s"absent $i"))
     assert(fps < 25, s"implausible false-positive count: $fps")
+  }
+
+  // -- spreading a narrow corpus (operators.Spread) ---------------------------
+
+  private lazy val cores = spark.sparkContext.defaultParallelism
+
+  /** The fixture corpus as the benchmark reads it: one parquet split. */
+  private def documents: DataFrame = spark.read.parquet(s"$sf/documents.parquet")
+
+  /** The fixture corpus plus a one-word-tail mutant of every document (so
+    * LSH has pairs to find), written once as one file and once as 8. */
+  private lazy val (withMutants1, withMutants8) = {
+    val d = documents.select(col("doc_id"), col("text"))
+    val corpus = d.unionByName(d.select((col("doc_id") + 1000000L).as("doc_id"),
+      concat(col("text"), lit(" zzmutant")).as("text")))
+    val dir = java.nio.file.Files.createTempDirectory("graft-spread")
+    corpus.coalesce(1).write.parquet(dir.resolve("one").toString)
+    corpus.repartition(8).write.parquet(dir.resolve("eight").toString)
+    (spark.read.parquet(dir.resolve("one").toString),
+      spark.read.parquet(dir.resolve("eight").toString))
+  }
+
+  /** What `body` made Spark do: jobs started, the task count of each
+    * completed stage in completion order, and each SQL action's plan. */
+  private final class Seen[T](val value: T, val jobs: Int, val stageTasks: Seq[Int],
+      val plans: Seq[SparkPlan])
+
+  private def seen[T](body: => T): Seen[T] = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val stageTasks = new ConcurrentLinkedQueue[Int]
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val onJobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stageTasks.add(e.stageInfo.numTasks)
+    }
+    val onActions = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(onJobs)
+    spark.listenerManager.register(onActions)
+    try {
+      val value = body
+      ListenerBusDrain(sc)
+      new Seen(value, jobs.get, stageTasks.asScala.toSeq, plans.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(onJobs)
+      spark.listenerManager.unregister(onActions)
+    }
+  }
+
+  /** Every node `p` executes: through AQE stages and subqueries, not
+    * into a reused exchange (its original is counted where it runs). */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _: ReusedExchangeExec => Seq.empty
+    case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+  }
+
+  private def roundRobins(plans: Seq[SparkPlan]): Int = plans.flatMap(nodes).count {
+    case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+    case _ => false
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("a one-partition corpus, a parquet file or a cached frame, is spread " +
+      "by one round-robin exchange, and its kernel stage runs on every core") {
+    def check(what: String, input: DataFrame): Unit = {
+      assert(Spread.partitions(input.queryExecution.executedPlan) == 1L, what)
+      val s = seen(Dedup.minhashSignatures(input, col("text"), col("doc_id")).collect())
+      assert(roundRobins(s.plans) == 1, s"$what:\n${s.plans.mkString("\n")}")
+      assert(s.stageTasks.last == cores, s"$what: tasks per stage ${s.stageTasks}")
+    }
+    check("parquet", documents)
+    val cached = documents.select(col("doc_id"), col("text")).persist()
+    try check("cached", cached) finally cached.unpersist()
+  }
+
+  test("a corpus with at least defaultParallelism partitions is not spread: " +
+      "no added exchange and no checkpoint") {
+    for (input <- Seq(withMutants8, documents.repartition(2 * cores))) {
+      val inputPlan = input.queryExecution.executedPlan
+      assert(Spread.partitions(inputPlan) >= cores, inputPlan.toString)
+      assert(Spread(input) eq input)
+      val plan = Dedup.minhashSignatures(input, col("text"), col("doc_id"))
+        .queryExecution.executedPlan
+      def exchanges(p: SparkPlan) = nodes(p).count(_.isInstanceOf[ShuffleExchangeLike])
+      assert(exchanges(plan) == exchanges(inputPlan), plan.toString)
+      assert(!nodes(plan).exists(_.isInstanceOf[RDDScanExec]), plan.toString)
+    }
+  }
+
+  test("deciding the spread starts no Spark job") {
+    val narrow = documents
+    val cached = documents.select(col("doc_id"), col("text")).persist()
+    try {
+      val s = seen {
+        val counts = Seq(narrow, cached, withMutants8, narrow.repartition(8))
+          .map(df => Spread.partitions(df.queryExecution.executedPlan))
+        // a wide input is not spread, so its operator frames build lazily
+        Dedup.minhashPairs(withMutants8, col("text"), col("doc_id"))
+        Contamination.scrub(withMutants8, narrow.filter(col("doc_id") % 97 === 0),
+          col("text"), col("doc_id"))
+        counts
+      }
+      assert(s.value.take(2) == Seq(1L, 1L) && s.value.drop(2).forall(_ >= cores),
+        s"partitions ${s.value}")
+      assert(s.jobs == 0, s"deciding the spread ran ${s.jobs} jobs")
+    } finally cached.unpersist()
+  }
+
+  test("scrub and minhashPairs return the same rows on a one-partition " +
+      "corpus and on an 8-partition copy of it") {
+    val eval = documents.filter(col("doc_id") % 97 === 0)
+    def scrubbed(d: DataFrame) =
+      sortedRows(Contamination.scrub(d, eval, col("text"), col("doc_id")))
+    def pairs(d: DataFrame) =
+      sortedRows(Dedup.minhashPairs(d, col("text"), col("doc_id")))
+    val kept = scrubbed(withMutants1)
+    assert(kept.nonEmpty && kept.size < withMutants1.count())
+    assert(kept == scrubbed(withMutants8))
+    val found = pairs(withMutants1)
+    assert(found.nonEmpty)
+    assert(found == pairs(withMutants8))
+  }
+
+  test("the curation chain (sample → scrub → pairs + left-anti → pack) " +
+      "reads documents once per pass") {
+    val docs = documents
+    val evalDocs = docs.filter(col("doc_id") % 97 === 0).select(col("text"))
+      .as[String].collect().toSeq.toDF("text")
+    val out = java.nio.file.Files.createTempDirectory("graft-curate").resolve("out")
+    val s = seen {
+      val sampled = Sampling.stratifiedHashSample(docs, col("doc_id"), col("lang"),
+        Map("en" -> 0.5, "zh" -> 0.9), defaultRate = 0.6)
+      val clean = Contamination.scrub(sampled, evalDocs, col("text"), col("doc_id"), n = 5)
+      val dups = Dedup.minhashPairs(clean, col("text"), col("doc_id"))
+        .select(col("id_b").as("doc_id")).distinct()
+      val packed = Packing.byBudget(clean.join(dups, Seq("doc_id"), "left_anti")
+          .filter(col("n_chars").between(50, 5000)),
+        Seq(col("lang")), col("doc_id"), col("n_chars"), budget = 20000L)
+      graft.sinks.Sinks.writeJsonlShards(packed.select(col("doc_id"), col("lang"),
+        col("pack_id"), col("text")), out.toString, 500L, partitionCols = Seq("lang"))
+      packed
+    }
+    def documentScans(p: SparkPlan) = nodes(p).collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.getName == "documents.parquet") => f
+    }
+    val rowsRead = s.plans.flatMap(documentScans)
+      .map(_.metrics("numOutputRows").value).sum
+    assert(rowsRead == docs.count(), s"documents rows read in the pass: $rowsRead")
+    val finalPlan = s.value.queryExecution.executedPlan
+    assert(documentScans(finalPlan).isEmpty, s"the pass plan scans documents:\n$finalPlan")
   }
 
   // -- cross-corpus near-dedup -----------------------------------------------
@@ -379,7 +552,10 @@ class PipelineOpsSpec extends SparkSpec {
     val simple = SparkEntry.queries("q_quality_model")(spark, sf)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-    val scans = simple.linesIterator.count(_.contains("FileScan parquet"))
+    // one leaf feeds the apply: the corpus file, or the checkpoint that
+    // operators.Spread reads a one-split corpus into, once
+    val scans = simple.linesIterator.count(l =>
+      l.contains("FileScan parquet") || l.contains("Scan ExistingRDD"))
     assert(scans == 1,
       s"apply plan should scan the corpus exactly once, got $scans:\n$simple")
     val rows = SparkEntry.queries("q_quality_model")(spark, sf)

@@ -14,6 +14,12 @@ import graft.plans.Hash32Expr
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
+  /** Composed MinHash signature of a shingle column (built-ins plus
+    * hash32), whose estimate invariants the minhash property checks. */
+  private def minhashSignature(shingles: org.apache.spark.sql.Column,
+      k: Int): org.apache.spark.sql.Column =
+    TextFunctions.minhashFromHashes(TextFunctions.hashedShingles(shingles), k)
+
   private val word = Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString)
   private val text = Gen.nonEmptyListOf(word).map(_.mkString(" "))
 
@@ -99,7 +105,7 @@ class PropertySpec extends SparkSpec {
   test("minhash estimated jaccard is 1.0 on identical docs, in [0,1] always (batched)") {
     val docs = samples(text, 30).distinct
     val df = docs.toDF("t").select(
-      TextFunctions.minhashSignature(TextFunctions.wordNgrams(col("t"), 2), 16)
+      minhashSignature(TextFunctions.wordNgrams(col("t"), 2), 16)
         .as("sig"))
     val est = df.select(
       (size(filter(zip_with(col("sig"), col("sig"),

@@ -21,7 +21,7 @@ class StatOps8Spec extends SparkSpec {
       .groupBy(col("day")).agg(sum(col("cents")).as("cents"))
       .as[(Long, Long)].collect().sortBy(_._1)
 
-  private def lowerMedian(xs: Seq[Long]): Long = {
+  private def lowerMedian(xs: collection.Seq[Long]): Long = {
     val s = xs.sorted
     s(((s.length + 1) / 2) - 1)
   }

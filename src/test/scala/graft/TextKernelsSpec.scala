@@ -12,6 +12,13 @@ import graft.functions.TextFunctions._
 class TextKernelsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The composed hashing half of winnowing, the oracle for
+    * [[graft.plans.WinnowFingerprintExpr]]: hash32 (built-ins only) of
+    * every char k-shingle of a PRE-STAGED normalized text column. */
+  private def hashedCharShinglesOfNormalized(n: org.apache.spark.sql.Column,
+      k: Int): org.apache.spark.sql.Column =
+    transform(charShinglesOfNormalized(n, k), sh => hash32Composed(sh))
+
   private val edges = Seq(
     "",
     " ",
