@@ -307,15 +307,18 @@ object Dedup {
   /** The apply step of cross-corpus dedup: `right` (the new crawl) minus
     * every doc near-duplicating something in `left` (the corpus already
     * trained on) — [[minhashPairsAcross]] candidates → anti-join on the
-    * right id (ids only shuffle, text never does). */
+    * right id (ids only shuffle, text never does). `right` is [[Spread]]
+    * once, and that one frame feeds both the signatures and the anti-join,
+    * so a narrow crawl is read once. */
   def scrubAgainst(left: DataFrame, right: DataFrame,
       textCol: Column, idCol: Column,
       shingleSize: Int = 3, k: Int = 16, bands: Int = 4,
       threshold: Double = 0.5, maxBucket: Int = 4096): DataFrame = {
-    val hit = minhashPairsAcross(left, right, textCol, idCol,
+    val spread = Spread(right)
+    val hit = minhashPairsAcross(left, spread, textCol, idCol,
         shingleSize, k, bands, threshold, maxBucket)
       .select(col("right_id")).distinct()
-    right.join(hit, idCol === hit("right_id"), "left_anti")
+    spread.join(hit, idCol === hit("right_id"), "left_anti")
   }
 
   /** Exact SUBSTRING-level duplication census — the span-granular dedup of

@@ -13,8 +13,9 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
   * `defaultParallelism`, the spread round-robins it to that many and makes
   * the result a lazy local checkpoint, so every consumer of the spread
   * frame reads one materialization instead of re-running the source (the
-  * n-gram overlap and the left-anti of [[Contamination.scrub]], then the
-  * pair stage and the final anti-join of a curation pass). An input that
+  * n-gram overlap and the left-anti of [[Contamination.scrub]], the
+  * signatures and the left-anti of [[Dedup.scrubAgainst]], then the pair
+  * stage and the final anti-join of a curation pass). An input that
   * already has enough partitions comes back unchanged: no exchange and no
   * checkpoint, so a corpus at scale is never reshuffled or pinned.
   *

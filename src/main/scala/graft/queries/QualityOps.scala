@@ -413,13 +413,14 @@ object QualityOps extends QueryPack {
     // its cardinality and the hottest key's row share in ppm (the number
     // that decides broadcast vs shuffle vs salt vs AQE-skew). One
     // group-count per column (each a map-side-combinable aggregate);
-    // the per-column summaries are 1-row unions.
+    // the per-column summaries are left-joined onto the column names.
     "q_skew_report" -> ((s, dir) => {
+      import s.implicits._
       // round 18: the four per-column censuses used to be four separate
       // corpus scans (ScanCount: lineitem 4× at sf0.01); a typed-slot
       // stack expand (the q_profile round-17 discipline) builds all four
       // off ONE scan — identical per-column cells, identical output.
-      t(s, dir, "lineitem")
+      val census = t(s, dir, "lineitem")
         .select(expr(
           """stack(4,
              'l_orderkey',   CAST(l_orderkey AS STRING),
@@ -433,7 +434,13 @@ object QualityOps extends QueryPack {
         .agg(count(lit(1)).as("n_distinct"),
           max(col("c")).as("top_count"),
           sum(col("c")).as("total"))
-        .select(col("column_name"), col("n_distinct"),
+      // every column gets a row even when lineitem is empty (n_distinct 0,
+      // no top value), as each of the oracle's per-column aggregates does
+      Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag")
+        .toDF("column_name")
+        .join(census, Seq("column_name"), "left")
+        .select(col("column_name"),
+          coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
           col("top_count").cast("long").as("top_count"),
           expr("(top_count * 1000000) div total").cast("long")
             .as("top_share_ppm"))

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Source layer: named-table access over the test corpus plus the schema
@@ -12,7 +14,9 @@ import org.apache.spark.sql.types._
   * predicate/projection pushdown handled by the parquet DataSource), and the
   * declared per-query column lists of the reference
   * (`src/from-ground-up.js:303-357`) become plain `.select`s that Catalyst
-  * prunes down to the file footer level.
+  * prunes down to the file footer level. A scan reuses the schema inferred
+  * on the first read of its file, the way a catalog table keeps its own;
+  * [[loadRaw]] says what that cache is keyed on and why.
   *
   * At 100 TB the same entry point serves partitioned/bucketed parquet or any
   * DataSource V2 table; nothing below assumes file sizes.
@@ -52,9 +56,73 @@ object Tables {
     }
   }
 
-  /** The uncorrected read (streaming uses it to probe the on-disk schema). */
-  def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The uncorrected read (streaming uses it to probe the on-disk schema).
+    *
+    * A path read has no catalog to hold its schema, and Spark infers a
+    * parquet schema with a Spark job (`mergeSchemasInParallel`) on every
+    * `spark.read.parquet`, 73 jobs per TPC-H pass over the same unchanged
+    * files. So only the first read of a file infers; its schema is
+    * kept and every later read passes it with `spark.read.schema`. The file
+    * index, the relation and the analysis stay per call. An entry's key
+    * ([[SchemaKey]]) is everything the inferred schema depends on:
+    *  - the qualified path;
+    *  - the identity of every file under it (name, length, mtime, listed
+    *    through the Hadoop `FileSystem`), so a file rewritten at the same
+    *    path is inferred again;
+    *  - the session's parquet inference confs ([[inferenceConfs]]), so a
+    *    session that reads timestamps or binaries differently gets its own
+    *    entry. Nothing else of the session is in the key: sessions made
+    *    with `newSession()` share entries.
+    * At most [[MaxSchemas]] entries are kept, least recently read out
+    * first, so a long-lived server cannot grow the cache without limit. */
+  def loadRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path) // missing: Spark's own error
+      case Some(key) =>
+        schemas.synchronized(Option(schemas.get(key))) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.synchronized(schemas.put(key, df.schema))
+            df
+        }
+    }
+  }
+
+  private final case class SchemaKey(path: String,
+      files: Seq[(String, Long, Long)], confs: Seq[Any])
+
+  /** The session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+    SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.PARQUET_SCHEMA_MERGING_ENABLED)
+
+  private val MaxSchemas = 256
+
+  private val schemas = new java.util.LinkedHashMap[SchemaKey, StructType](
+      16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+      size > MaxSchemas
+  }
+
+  /** `path`'s cache key, or None when nothing is there. */
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      val listing = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (listing.hasNext) {
+        val f = listing.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(SchemaKey(fs.makeQualified(p).toString, files.result().sorted,
+        inferenceConfs.map(spark.sessionState.conf.getConf(_))))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** S1 — live-database scan, the engine form of the reference's pg
     * prepared-statement source (`/root/reference/src/from-ground-up.js:

@@ -227,7 +227,8 @@ object GateSweep {
 
   /** The one pass over every registered gate, each visited at sf0.001
     * and then at sf0.1 ([[checkGate]]), inside the CodeGenerator capture;
-    * it prints how many classes its sf0.1 steps compiled. Streaming gates
+    * it prints how many Spark jobs it started and how many classes its
+    * sf0.1 steps compiled. Streaming gates
     * included (round 17): for a streaming gate the frame returned (and
     * checked) here is its DRAINED batch side — the memory-sink readout
     * plus any batch frames the gate joins against it (e.g.
@@ -237,12 +238,14 @@ object GateSweep {
     * (StreamingSpec), not reachable from the returned frame. */
   lazy val violations: Seq[Violation] = capturingCodegen {
     val before = headroomCompileCount.get
-    val found = SparkEntry.queries.keys.toSeq.sorted.flatMap { g =>
-      checkGate(g, SparkEntry.queries(g)(session, _))
+    val (found, jobs) = SparkSpec.countingJobs {
+      SparkEntry.queries.keys.toSeq.sorted.flatMap { g =>
+        checkGate(g, SparkEntry.queries(g)(session, _))
+      }
     }
     println(s"[gate-pass] ${SparkEntry.queries.size} gates, " +
-      s"${found.size} violations; the sf0.1 steps compiled " +
-      s"${headroomCompileCount.get - before} classes")
+      s"${found.size} violations, $jobs Spark jobs; the sf0.1 steps " +
+      s"compiled ${headroomCompileCount.get - before} classes")
     found
   }
 

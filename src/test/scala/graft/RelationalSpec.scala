@@ -51,6 +51,17 @@ class RelationalSpec extends SparkSpec {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("q_skew_report over an empty lineitem reports every column: " +
+      "n_distinct 0 and no top value, like its oracle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-li")
+    graft.sources.Tables.load(spark, sf, "lineitem").limit(0)
+      .write.parquet(dir.resolve("lineitem.parquet").toString)
+    val rows = SparkEntry.queries("q_skew_report")(spark, dir.toString)
+      .collect().toSeq
+    assert(rows == Seq("l_orderkey", "l_partkey", "l_returnflag",
+      "l_suppkey").map(Row(_, 0L, null, null)))
+  }
+
   test("q_topk returns exactly 10 rows in order") {
     val rows: Array[Row] = SparkEntry.queries("q_topk")(spark, sf).collect()
     assert(rows.length == 10)

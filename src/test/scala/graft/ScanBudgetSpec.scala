@@ -65,7 +65,6 @@ object ScanBudget {
     "q_decontaminate_matrix" -> Seq(("documents", 2, 1)),
     "q_dedup_canonical" -> Seq(("documents", 2, 1)),
     "q_dedup_cross" -> Seq(("documents", 2, 1)),
-    "q_dedup_cross_scrub" -> Seq(("documents", 5, 1)),
     "q_dedup_edit" -> Seq(("documents", 2, 1)),
     "q_dedup_exact" -> Seq(("documents", 3, 1)),
     "q_dedup_minhash" -> Seq(("documents", 2, 1)),

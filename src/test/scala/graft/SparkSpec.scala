@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,4 +22,22 @@ object SparkSpec {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** `f`'s value and the Spark jobs started while it ran, counted by a
+    * listener attached for the length of `f` only. */
+  def countingJobs[T](f: => T): (T, Int) = {
+    val sc = session.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val value = f
+      ListenerBusDrain(sc)
+      (value, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
